@@ -1,12 +1,18 @@
-"""Optional native inner loop for the MinHash hot path.
+"""Optional native inner loops for the MinHash hot path and verification.
 
 The (t x n) NumPy formulation writes ~12 MB of temporaries per 5 KB
 document; the fused C loop keeps the shingle set in L1 and computes the
 per-function minimum in one pass (~8x). Compiled on first use with the
 system cc into a per-user cache dir; silently falls back to NumPy when no
 compiler is available. Semantics are identical (tests assert bit-equality):
-h = (a*x + b) wrapped mod 2**64, minus p when >= p (valid since 2**64 < 2p),
-min per function; empty set handled by the caller.
+
+* ``minhash_axb``: h = (a*x + b) wrapped mod 2**64, minus p when >= p
+  (valid since 2**64 < 2p), min per function; empty set handled by the
+  caller.
+* ``intersect_count``: per pair of ascending, distinct uint64 sets (one
+  Arrow batch of pairs per call), the size of their intersection — a
+  sorted merge, where a per-pair hash set would re-hash inputs that are
+  already ordered.
 """
 
 from __future__ import annotations
@@ -32,6 +38,26 @@ void minhash_axb(const uint64_t *xs, long n, const uint64_t *a,
             if (h < mn) mn = h;
         }
         out[j] = mn;
+    }
+}
+
+/* pair i intersects va[oa[i]:oa[i+1]] with vb[ob[i]:ob[i+1]]; both ascending
+   and distinct in UNSIGNED order. The merge advances on comparisons, not
+   branches: the equal step moves both cursors. */
+void intersect_count(const uint64_t *va, const int64_t *oa,
+                     const uint64_t *vb, const int64_t *ob,
+                     long n, int64_t *out) {
+    for (long p = 0; p < n; ++p) {
+        const uint64_t *a = va + oa[p], *b = vb + ob[p];
+        long na = oa[p + 1] - oa[p], nb = ob[p + 1] - ob[p];
+        long i = 0, j = 0, c = 0;
+        while (i < na && j < nb) {
+            uint64_t x = a[i], y = b[j];
+            c += x == y;
+            i += x <= y;
+            j += y <= x;
+        }
+        out[p] = c;
     }
 }
 """
@@ -83,24 +109,48 @@ def _build() -> "ctypes.CDLL | None":
             ctypes.c_long, ctypes.c_uint64, ctypes.POINTER(ctypes.c_uint64),
         ]
         lib.minhash_axb.restype = None
+        u64p, i64p = ctypes.POINTER(ctypes.c_uint64), ctypes.POINTER(ctypes.c_int64)
+        lib.intersect_count.argtypes = [u64p, i64p, u64p, i64p, ctypes.c_long, i64p]
+        lib.intersect_count.restype = None
         return lib
     except Exception:
         return None
 
 
-def native_minhash(xs: np.ndarray, a: np.ndarray, b: np.ndarray, p: int):
-    """Returns (t,) uint64 minima, or None when the native lib is absent."""
+def _load() -> "ctypes.CDLL | None":
     global _lib, _tried
     if not _tried:
         _tried = True
         if os.environ.get("MHS_DISABLE_NATIVE") != "1":
             _lib = _build()
-    if _lib is None:
+    return _lib
+
+
+def native_minhash(xs: np.ndarray, a: np.ndarray, b: np.ndarray, p: int):
+    """Returns (t,) uint64 minima, or None when the native lib is absent."""
+    lib = _load()
+    if lib is None:
         return None
     xs = np.ascontiguousarray(xs, dtype=np.uint64)
     out = np.empty(a.shape[0], dtype=np.uint64)
     u64p = ctypes.POINTER(ctypes.c_uint64)
-    _lib.minhash_axb(xs.ctypes.data_as(u64p), xs.shape[0],
-                     a.ctypes.data_as(u64p), b.ctypes.data_as(u64p),
-                     a.shape[0], ctypes.c_uint64(p), out.ctypes.data_as(u64p))
+    lib.minhash_axb(xs.ctypes.data_as(u64p), xs.shape[0],
+                    a.ctypes.data_as(u64p), b.ctypes.data_as(u64p),
+                    a.shape[0], ctypes.c_uint64(p), out.ctypes.data_as(u64p))
+    return out
+
+
+def native_intersect_count(va: np.ndarray, oa: np.ndarray,
+                           vb: np.ndarray, ob: np.ndarray):
+    """Returns (n,) int64 intersection sizes, or None when the native lib is
+    absent. Arguments as ``core.shingles.intersect_count`` (validated
+    there)."""
+    lib = _load()
+    if lib is None:
+        return None
+    out = np.empty(oa.shape[0] - 1, dtype=np.int64)
+    u64p, i64p = ctypes.POINTER(ctypes.c_uint64), ctypes.POINTER(ctypes.c_int64)
+    lib.intersect_count(va.ctypes.data_as(u64p), oa.ctypes.data_as(i64p),
+                        vb.ctypes.data_as(u64p), ob.ctypes.data_as(i64p),
+                        out.shape[0], out.ctypes.data_as(i64p))
     return out

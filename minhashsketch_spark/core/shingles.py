@@ -15,6 +15,8 @@ batches inside ``mapInPandas`` — no per-row Python.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 
 from . import _native
@@ -46,6 +48,28 @@ def shingle_hashes(text: bytes | np.ndarray, k: int) -> np.ndarray:
         out += b[j:j + n - k + 1].astype(np.uint64) * np.uint64(mpow)
         mpow = (mpow * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
     return out
+
+
+def utf8_views(texts) -> Iterator[np.ndarray]:
+    """Per-row uint8 views of an Arrow string array's UTF-8 bytes, in row
+    order; a null row is an empty view. The views slice the array's
+    (offsets, data) buffers directly — no per-row Python str/bytes object
+    is ever materialized (texts are already UTF-8 in Arrow)."""
+    import pyarrow as pa
+
+    tarr = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
+    n = len(tarr)
+    if n == 0:
+        return
+    bufs = tarr.buffers()
+    odt = np.int64 if pa.types.is_large_string(tarr.type) else np.int32
+    offs = np.frombuffer(bufs[1], dtype=odt)[tarr.offset:tarr.offset + n + 1]
+    data = (np.frombuffer(bufs[2], dtype=np.uint8)
+            if len(bufs) > 2 and bufs[2] is not None else np.empty(0, np.uint8))
+    valid = ~np.asarray(tarr.is_null()) if tarr.null_count else None
+    empty = data[:0]
+    for i in range(n):
+        yield empty if valid is not None and not valid[i] else data[offs[i]:offs[i + 1]]
 
 
 def distinct_shingles(text: bytes | np.ndarray, k: int) -> np.ndarray:
@@ -161,6 +185,31 @@ def get_family(t: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     a = np.array([x[0] for x in ab], dtype=np.uint64)
     b = np.array([x[1] for x in ab], dtype=np.uint64)
     return a, b
+
+
+def intersect_count(va: np.ndarray, oa: np.ndarray,
+                    vb: np.ndarray, ob: np.ndarray) -> np.ndarray:
+    """(n,) int64 sizes |A_i ∩ B_i| for a batch of n set pairs in offsets
+    form: A_i = va[oa[i]:oa[i+1]], B_i = vb[ob[i]:ob[i+1]] (the layout of
+    an Arrow list column). Every set is ascending and distinct as uint64 —
+    the order ``distinct_shingles`` emits. ``va``/``vb`` must be uint64:
+    an int64 view of the same sets is ordered differently once values
+    reach 2**63, and a merge in that order would miscount."""
+    if va.dtype != np.uint64 or vb.dtype != np.uint64:
+        raise TypeError("intersect_count takes uint64 sets (view int64 as uint64)")
+    va, vb = np.ascontiguousarray(va), np.ascontiguousarray(vb)
+    oa = np.ascontiguousarray(oa, dtype=np.int64)
+    ob = np.ascontiguousarray(ob, dtype=np.int64)
+    for v, o in ((va, oa), (vb, ob)):
+        if (o.ndim != 1 or o.shape[0] != oa.shape[0] or o.shape[0] == 0
+                or o[0] < 0 or o[-1] > v.shape[0] or np.any(o[1:] < o[:-1])):
+            raise ValueError("offsets must be n+1 non-decreasing bounds into the values")
+    native = _native.native_intersect_count(va, oa, vb, ob)
+    if native is not None:
+        return native
+    return np.array([np.intersect1d(va[oa[i]:oa[i + 1]], vb[ob[i]:ob[i + 1]],
+                                    assume_unique=True).shape[0]
+                     for i in range(oa.shape[0] - 1)], dtype=np.int64)
 
 
 def exact_jaccard(s1: np.ndarray, s2: np.ndarray) -> float:

@@ -34,6 +34,7 @@ from ..core.shingles import (
     distinct_shingles,
     get_family,
     minhash_matrix,
+    utf8_views,
 )
 
 SIG_SCHEMA = ("url string, n_shingles bigint, sig array<bigint>, "
@@ -72,25 +73,8 @@ def compute_signatures(docs: DataFrame, cfg: PipelineConfig,
             n = batch.num_rows
             sigs = np.empty((n, t), dtype=np.uint64)
             counts = np.empty(n, dtype=np.int64)
-            # zero-copy byte views over the Arrow string buffers: slice the
-            # (offsets, data) buffers directly — no per-row Python str/bytes
-            # object is ever materialized (texts are already UTF-8 in Arrow)
-            tarr = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
-            bufs = tarr.buffers()
-            odt = np.int64 if pa.types.is_large_string(tarr.type) else np.int32
-            offs = np.frombuffer(bufs[1], dtype=odt)[
-                tarr.offset:tarr.offset + n + 1] if n else np.zeros(1, odt)
-            data = (np.frombuffer(bufs[2], dtype=np.uint8)
-                    if len(bufs) > 2 and bufs[2] is not None else np.empty(0, np.uint8))
-            if tarr.null_count:
-                valid = ~np.asarray(tarr.is_null())
-            else:
-                valid = None
-            for i in range(n):
-                if valid is not None and not valid[i]:
-                    xs = distinct_shingles(b"", k)
-                else:
-                    xs = distinct_shingles(data[offs[i]:offs[i + 1]], k)
+            for i, text in enumerate(utf8_views(texts)):
+                xs = distinct_shingles(text, k)
                 counts[i] = xs.shape[0]
                 sigs[i] = minhash_matrix(xs, a_par, b_par)
             if n:
@@ -111,6 +95,7 @@ def compute_signatures(docs: DataFrame, cfg: PipelineConfig,
             if keep_text:
                 # zero-copy: the input batch's own string buffer (downcast
                 # the rare large_string batch to match the declared schema)
+                tarr = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
                 arrays.append(tarr.cast(pa.string())
                               if pa.types.is_large_string(tarr.type) else tarr)
                 names.append("text")
@@ -141,19 +126,8 @@ def shingle_counts(docs: DataFrame, cfg: PipelineConfig,
             texts = batch.column(1)
             n = batch.num_rows
             counts = np.empty(n, dtype=np.int64)
-            tarr = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
-            bufs = tarr.buffers()
-            odt = np.int64 if pa.types.is_large_string(tarr.type) else np.int32
-            offs = np.frombuffer(bufs[1], dtype=odt)[
-                tarr.offset:tarr.offset + n + 1] if n else np.zeros(1, odt)
-            data = (np.frombuffer(bufs[2], dtype=np.uint8)
-                    if len(bufs) > 2 and bufs[2] is not None else np.empty(0, np.uint8))
-            valid = ~np.asarray(tarr.is_null()) if tarr.null_count else None
-            for i in range(n):
-                if valid is not None and not valid[i]:
-                    counts[i] = 0
-                else:
-                    counts[i] = distinct_shingles(data[offs[i]:offs[i + 1]], k).shape[0]
+            for i, text in enumerate(utf8_views(texts)):
+                counts[i] = distinct_shingles(text, k).shape[0]
             yield pa.RecordBatch.from_arrays(
                 [urls.combine_chunks() if isinstance(urls, pa.ChunkedArray) else urls,
                  pa.array(counts)],

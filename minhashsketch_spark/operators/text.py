@@ -243,15 +243,18 @@ TFIDF_EAGER_DOC_LIMIT = 2_000_000
 TFIDF_EAGER_INPUT_BYTES = 256 * 1024 * 1024
 
 
-def _input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk size of a file-backed frame (None when not file-backed
-    or any stat fails) — same Hadoop-FS probe as pipeline.input_fingerprint."""
+def _input_within(df: DataFrame, limit: int) -> bool:
+    """True when ``df`` is file-backed and its files total at most ``limit``
+    bytes on disk — same Hadoop-FS probe as pipeline.input_fingerprint.
+    The probe is one serial driver round trip per file, so it stops at the
+    first file that takes the total past ``limit``; a frame that is not
+    file-backed, or whose size cannot be read, is not within any limit."""
     try:
         files = df.inputFiles()
     except Exception:
-        return None
+        return False
     if not files:
-        return None
+        return False
     sc = df.sparkSession.sparkContext
     hconf = sc._jsc.hadoopConfiguration()
     jpath = sc._jvm.org.apache.hadoop.fs.Path
@@ -261,8 +264,10 @@ def _input_bytes(df: DataFrame) -> int | None:
             p = jpath(f)
             total += p.getFileSystem(hconf).getFileStatus(p).getLen()
         except Exception:
-            return None
-    return total
+            return False
+        if total > limit:
+            return False
+    return True
 
 
 def tfidf_top_terms(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
@@ -303,9 +308,9 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
     # scanned/exploded once; otherwise stay lazy — executor storage must
     # never hold a corpus-scale (doc, term) frame (same gate pattern as
     # the broadcast limits in verify.py). Values are unchanged either way.
-    nbytes = _input_bytes(docs)
+    # the doc-count test first: the byte probe stats every input file
     if (n_docs <= TFIDF_EAGER_DOC_LIMIT
-            and nbytes is not None and nbytes <= TFIDF_EAGER_INPUT_BYTES):
+            and _input_within(docs, TFIDF_EAGER_INPUT_BYTES)):
         tf = tf.localCheckpoint()
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     score = (F.col("tf").cast("double") * F.lit(float(n_docs))) / F.col("df")

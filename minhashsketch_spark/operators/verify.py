@@ -12,8 +12,12 @@ Jaccard.
 * **Exact Jaccard** (north_star: "exact Jaccard verification filters
   pairs") recomputes distinct shingle sets only for docs that appear in at
   least one candidate pair (a left-semi join — <<1% of the corpus at scale)
-  and intersects them JVM-side via ``array_intersect`` (hash-set based,
-  O(n)).
+  and counts each pair's intersection ONCE, in one ``mapInArrow`` over the
+  attached pairs: a sorted merge of the two ascending uint64 sets per pair,
+  one native call per Arrow batch (``core.shingles.intersect_count``).
+  The map emits the three set sizes, so jaccard and containment are plain
+  arithmetic on materialized columns — a filter pushed below them can
+  never copy the intersection into a join condition.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..core.shingles import distinct_shingles
+from ..core.shingles import distinct_shingles, intersect_count, utf8_views
 
 
 # candidate-pair frames at or under this row count are broadcast into the
@@ -50,13 +54,16 @@ def est_prefilter_gate(cfg: PipelineConfig) -> float:
     sigma`` where sigma is the t-sample binomial std of the estimator at
     p = threshold. A pair whose exact jaccard is >= threshold has
     P(est < gate) <= ~3e-7 (Hoeffding; ~1e-9 by the normal
-    approximation), so filtering
-    candidates below the gate BEFORE the shingle recompute + intersect
-    cannot change any jaccard>=threshold or is_dup output (the gate is
-    strictly below threshold). At the flagship t=128/thr=0.7 the gate is
-    ~0.457 and kills the ~98% of LSH band collisions that are random
-    shingle matches from a small vocabulary; at small t the margin widens
-    automatically (t=16 -> gate ~0.01, i.e. no risky pruning)."""
+    approximation). Filtering candidates below the gate BEFORE the
+    shingle recompute + intersect is therefore exact for ``is_dup`` (it
+    thresholds est_sim itself, and the gate is strictly below threshold)
+    but probabilistic for consumers that threshold on ``jaccard``: each
+    pair with jaccard >= threshold is dropped with probability <= ~3e-7 —
+    the same recall class as LSH banding itself. At the flagship
+    t=128/thr=0.7 the gate is ~0.457 and kills the ~98% of LSH band
+    collisions that are random shingle matches from a small vocabulary; at
+    small t the margin widens automatically (t=16 -> gate ~0.01, i.e. no
+    risky pruning)."""
     import math
 
     sigma = math.sqrt(cfg.threshold * (1.0 - cfg.threshold) / cfg.t)
@@ -138,26 +145,36 @@ def shingle_sets_for(docs: DataFrame, urls: DataFrame, cfg: PipelineConfig,
                      broadcast_urls: bool = False) -> DataFrame:
     """Distinct shingle-hash sets, computed only for ``urls`` (semi join).
 
+    ``shingles`` holds each set in ascending UINT64 order, stored as its
+    int64 view (SURVEY.md H1) — read it back as uint64 before any
+    order-dependent use. Texts are read zero-copy out of the Arrow string
+    buffers, as in ``compute_signatures``.
+
     ``broadcast_urls``: the url set is known-small — broadcast the semi-join
     build side so the corpus scan is never shuffled (guide §3.1)."""
+    import pyarrow as pa
+
     k = cfg.k
     url_set = urls.select(F.col("url").alias(url_col)).distinct()
     if broadcast_urls:
         url_set = F.broadcast(url_set)
     needed = docs.join(url_set, on=url_col, how="left_semi")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for text in pdf[text_col].values:
-                xs = distinct_shingles((text or "").encode("utf-8", "surrogatepass"), k)
-                outs.append(xs.view(np.int64))
-            yield pd.DataFrame({"url": pdf[url_col].values, "shingles": outs})
+    def gen(batches) -> "Iterator[pa.RecordBatch]":
+        for batch in batches:
+            sets = [distinct_shingles(text, k) for text in utf8_views(batch.column(1))]
+            offs = np.zeros(len(sets) + 1, dtype=np.int32)
+            offs[1:] = np.cumsum([xs.shape[0] for xs in sets], dtype=np.int64)
+            vals = np.concatenate(sets) if sets else np.empty(0, np.uint64)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0),
+                 pa.ListArray.from_arrays(pa.array(offs), pa.array(vals.view(np.int64)))],
+                names=["url", "shingles"])
 
     # no ensure_parallelism here: `needed` sits downstream of the semi-join
     # shuffle, so it already carries >= shuffle.partitions partitions (and
     # probing .rdd on an AQE join plan can execute its stages eagerly)
-    return needed.select(F.col(url_col), F.col(text_col)).mapInPandas(
+    return needed.select(F.col(url_col), F.col(text_col)).mapInArrow(
         gen, schema="url string, shingles array<bigint>")
 
 
@@ -177,10 +194,10 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
     ``with_containment`` adds (containment_a, containment_b) =
     |A∩B|/|A|, |A∩B|/|B| — the ASYMMETRIC overlap: a short quote embedded
     in a long page has low jaccard but containment_a ~ 1. Costs nothing
-    extra (the intersection is already computed); note LSH candidate
-    generation targets RESEMBLANCE, so low-jaccard/high-containment pairs
-    outside the candidate set are the substring operator's job
-    (operators.substring), not this one's.
+    extra (the per-pair intersection count is computed either way); note
+    LSH candidate generation targets RESEMBLANCE, so low-jaccard/
+    high-containment pairs outside the candidate set are the substring
+    operator's job (operators.substring), not this one's.
 
     ``checkpoint_sigs=False`` when the signature frame is already
     materialized (parquet/bucketed-table-backed, or checkpointed by the
@@ -201,13 +218,16 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
     are dropped from the OUTPUT entirely, so only pass a gate when every
     downstream consumer filters on ``jaccard >= threshold`` or ``is_dup``
     and the gate is a safe margin below threshold (use
-    ``est_prefilter_gate(cfg)``; see its tail-bound argument). The gate is
-    the single biggest verification win on small-vocabulary corpora: ~98%
-    of LSH candidates are random band collisions whose exact jaccard is
-    nowhere near threshold, and gating them skips their shingle recompute
-    and array_intersect (measured 8.5 -> 3.4 s same-session at 50k docs /
-    127k candidates). Callers that need sub-threshold rows (containment
-    mining, estimator calibration) must leave it None.
+    ``est_prefilter_gate(cfg)``). With that gate ``is_dup`` is unchanged
+    exactly; a consumer thresholding ``jaccard`` loses each qualifying
+    pair with probability <= ~3e-7 (the tail bound in
+    ``est_prefilter_gate``). The gate is the single biggest verification
+    win on small-vocabulary corpora: ~98% of LSH candidates are random
+    band collisions whose exact jaccard is nowhere near threshold, and
+    gating them skips their shingle recompute and intersection (measured
+    8.5 -> 3.4 s same-session at 50k docs / 127k candidates). Callers that
+    need sub-threshold rows (containment mining, estimator calibration)
+    must leave it None.
     """
     # both stages consume ``signatures``/``sets_df`` twice (a-side, b-side);
     # EAGER localCheckpoint so the UDFs run exactly once — a lazy persist
@@ -264,22 +284,51 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
         est = F.broadcast(est)
         if hash_b:
             sh_b = sh_b.hint("shuffle_hash")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    out = (
+
+    # a closure, not a module-level function: cloudpickle ships a closure
+    # by value, so a Python worker imports only core.shingles (~10 ms), not
+    # this Spark-side module (~0.4 s to import in a fresh worker)
+    def count(batches) -> "Iterator[pa.RecordBatch]":
+        """(url_a, url_b, est_sim, sh_a, sh_b) -> (url_a, url_b, est_sim,
+        n_a, n_b, inter): both set sizes and the intersection size of
+        every pair; the two arrays are dropped."""
+        import pyarrow as pa
+
+        for batch in batches:
+            sa, sb = batch.column(3), batch.column(4)
+            # list offsets index the (unsliced) child values; the int64
+            # child is viewed back to uint64, the order the sets are in
+            oa = np.asarray(sa.offsets, dtype=np.int64)
+            ob = np.asarray(sb.offsets, dtype=np.int64)
+            inter = intersect_count(np.asarray(sa.values).view(np.uint64), oa,
+                                    np.asarray(sb.values).view(np.uint64), ob)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), batch.column(1), batch.column(2),
+                 pa.array(np.diff(oa)), pa.array(np.diff(ob)), pa.array(inter)],
+                names=["url_a", "url_b", "est_sim", "n_a", "n_b", "inter"])
+
+    counted = (
         est.join(sh_a, "url_a").join(sh_b, "url_b")
+        .select("url_a", "url_b", "est_sim", "sh_a", "sh_b")
+        .mapInArrow(count,
+                    schema="url_a string, url_b string, est_sim double, "
+                           "n_a bigint, n_b bigint, inter bigint")
+    )
+    inter = F.col("inter").cast("double")
+    union = F.col("n_a") + F.col("n_b") - F.col("inter")
+    out = (
+        counted
         .withColumn("jaccard",
-                    F.when(union > 0, inter.cast("double") / union.cast("double"))
+                    F.when(union > 0, inter / union.cast("double"))
                     .otherwise(F.lit(1.0)))
         .withColumn("is_dup", F.col("est_sim") >= F.lit(cfg.threshold))
     )
     cols = ["url_a", "url_b", "est_sim", "jaccard", "is_dup"]
     if with_containment:
-        for side, col in (("a", "sh_a"), ("b", "sh_b")):
+        for side in ("a", "b"):
+            n = F.col(f"n_{side}")
             out = out.withColumn(
                 f"containment_{side}",
-                F.when(F.size(col) > 0,
-                       inter.cast("double") / F.size(col).cast("double"))
-                .otherwise(F.lit(1.0)))
+                F.when(n > 0, inter / n.cast("double")).otherwise(F.lit(1.0)))
         cols += ["containment_a", "containment_b"]
     return out.select(*cols)

@@ -118,8 +118,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     # the gate changes only the verified stage's contents: fold it into
     # THAT stage name, so the expensive gate-independent
     # signatures/candidates stages (and the bit-identical clusters) stay
-    # shared between gated and ungated runs on the same checkpoint_root
-    gate_sfx = (f"-g{est_gate:.6f}"
+    # shared between gated and ungated runs on the same checkpoint_root.
+    # repr of the float is exact (it round-trips), so two gates never share
+    # a verified stage however close they are
+    gate_sfx = (f"-g{float(est_gate)!r}"
                 if est_gate is not None and est_gate > 0.0 else "")
     timings: dict[str, float] = {}
     # Arrow batch sizing for the signature UDF — the analogue of the

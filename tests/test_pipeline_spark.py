@@ -237,6 +237,27 @@ def test_resume_byte_identical(spark, tmp_path):
     assert c1 == c2
 
 
+def test_distinct_gates_get_distinct_verified_stages(spark, tmp_path):
+    """Two est gates that agree to six decimals must not share a verified
+    stage on one checkpoint root: a resume under one gate would return the
+    other gate's (larger or smaller) verified table."""
+    import os
+
+    docs_df, _ = corpus_dataframe(spark, n_docs=40, seed=13)
+    root = str(tmp_path / "ckpt")
+    g1, g2 = 0.5, 0.5 + 1e-9
+    run_pipeline(spark, docs_df, CFG, checkpoint_root=root, est_gate=g1)
+    r2 = run_pipeline(spark, docs_df, CFG, checkpoint_root=root, est_gate=g2)
+    assert [s for s in r2["timings"] if s.startswith("verified")], r2["timings"]
+    base = os.path.join(root, CFG.config_hash())
+    stages = [f for f in os.listdir(base)
+              if f.startswith("verified") and f.endswith(".manifest.json")]
+    assert len(stages) == 2, stages
+    # and each gate resumes from its own stage
+    r3 = run_pipeline(spark, docs_df, CFG, checkpoint_root=root, est_gate=g1)
+    assert r3["timings"] == {}
+
+
 def test_byte_identical_text_invariant(spark):
     """input_hint: byte-identical extracted text per url end-to-end —
     the pipeline never rewrites the documents table; assert the text survives

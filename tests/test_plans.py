@@ -125,6 +125,8 @@ def test_tfidf_scan_prunes_and_stays_jvm(spark, monkeypatch):
     # lazy (above-the-gate) path: the corpus scan is in the final plan —
     # assert it prunes to (doc_id, text) and nothing crosses to Python
     monkeypatch.setattr(TX, "TFIDF_EAGER_DOC_LIMIT", 0)
+    # over the doc-count gate the per-file byte probe must not run at all
+    monkeypatch.setattr(TX, "_input_within", lambda *a: pytest.fail("probed"))
     plan = _plan(TX.tfidf_top_terms(docs, k=3))
     assert "EvalPython" not in plan
     scan = [l for l in plan.splitlines() if "ReadSchema" in l]
@@ -132,6 +134,7 @@ def test_tfidf_scan_prunes_and_stays_jvm(spark, monkeypatch):
     # eager (r6 gated) path: tf is materialized once, so the final plan
     # hangs off the checkpointed RDD — exactly one tf subtree, no second
     # corpus scan, still no Python eval
+    monkeypatch.undo()
     monkeypatch.setattr(TX, "TFIDF_EAGER_DOC_LIMIT", 2_000_000)
     plan = _plan(TX.tfidf_top_terms(docs, k=3))
     assert "EvalPython" not in plan
@@ -339,6 +342,38 @@ def test_verified_pairs_small_path_broadcasts_pair_spine(spark, monkeypatch):
     assert "BroadcastHashJoin" in plan, plan
     assert "ShuffledHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_verified_pairs_intersects_once_in_one_arrow_map(spark):
+    """The exact-jaccard intersection runs once per pair, in ONE Python map
+    over the attach spine (url_a, url_b, est_sim, sh_a, sh_b) — never as a
+    JVM array_intersect, and a downstream jaccard filter stays above the
+    map (it cannot copy the intersection into a join condition)."""
+    import re
+
+    from minhashsketch_spark.operators import verify as V
+    from minhashsketch_spark.operators.lsh import candidate_pairs
+    from minhashsketch_spark.operators.signatures import compute_signatures
+    from minhashsketch_spark.sources.corpus import corpus_dataframe
+
+    cfg = PipelineConfig(k=9, m=1, t=16, bands=4, rows=4, seed=1, threshold=0.7)
+    docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
+    sigs = compute_signatures(docs, cfg).localCheckpoint()
+    pairs = candidate_pairs(sigs, cfg)
+    ver = V.verified_pairs(pairs, sigs, docs, cfg, checkpoint_sigs=False,
+                           with_containment=True)
+    plan = _plan(ver.filter(F.col("jaccard") >= cfg.threshold))
+    assert "array_intersect" not in plan, plan
+    tree = plan.split("\n\n")[0]
+    maps = re.findall(r"(MapInArrow|MapInPandas|\w*EvalPython\w*) \((\d+)\)", tree)
+    assert [m[0] for m in maps] == ["MapInArrow"], plan
+    detail = re.search(rf"^\({maps[0][1]}\) MapInArrow\nInput \[5\]: \[([^\]]*)\]",
+                       plan, re.M)
+    assert detail, plan
+    assert [re.sub(r"#\d+L?$", "", c) for c in detail.group(1).split(", ")] == \
+        ["url_a", "url_b", "est_sim", "sh_a", "sh_b"], plan
+    for cond in re.findall(r"Join condition: (.*)", plan):
+        assert cond == "None", cond
 
 
 def test_embedding_near_dup_attach_is_broadcast(spark):

@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the core kernels — FIXTURES.md F4."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from minhashsketch_spark.core import (
@@ -126,6 +127,53 @@ def test_native_minhash_equals_numpy():
         _native._lib = None
         got = minhash_matrix(xs, a_par, b_par)
         assert np.array_equal(ref, got)
+
+
+def test_native_intersect_count_equals_numpy(monkeypatch):
+    """The native sorted merge, its NumPy fallback and Python set
+    intersection agree on a batch of set pairs — including sets that
+    straddle 2**63, where int64 order differs from the uint64 order the
+    merge must run in."""
+    from minhashsketch_spark.core import _native
+    from minhashsketch_spark.core.shingles import intersect_count
+
+    rng = np.random.default_rng(17)
+
+    def rand(n, lo=0, span=2**64 - 1):
+        return np.unique(np.uint64(lo) + rng.integers(0, span, size=n, dtype=np.uint64))
+
+    empty = np.empty(0, np.uint64)
+    big = rand(500)
+    near = [rand(400, lo=2**63 - 300, span=600) for _ in range(4)]
+    assert (big >= 2**63).any() and (big < 2**63).any()
+    pairs = [(empty, empty), (empty, big), (big, empty),
+             (big[:200], big[200:]),                    # disjoint
+             (big, big.copy()),                         # identical
+             (big[50:300], big),                        # subset
+             (big, np.unique(np.concatenate([big[::3], rand(300)]))),
+             (near[0], near[1]), (near[2], near[3])]    # dense, across 2**63
+
+    def csr(sets):
+        offs = np.zeros(len(sets) + 1, np.int64)
+        offs[1:] = np.cumsum([s.shape[0] for s in sets])
+        return np.concatenate(sets), offs
+
+    va, oa = csr([a for a, _ in pairs])
+    vb, ob = csr([b for _, b in pairs])
+    want = [len(set(a.tolist()) & set(b.tolist())) for a, b in pairs]
+    monkeypatch.setattr(_native, "_lib", None)
+    monkeypatch.setattr(_native, "_tried", False)
+    monkeypatch.setenv("MHS_DISABLE_NATIVE", "1")
+    ref = intersect_count(va, oa, vb, ob)
+    monkeypatch.delenv("MHS_DISABLE_NATIVE")
+    monkeypatch.setattr(_native, "_tried", False)
+    got = intersect_count(va, oa, vb, ob)
+    assert ref.dtype == got.dtype == np.int64
+    assert ref.tolist() == want
+    assert got.tolist() == want
+    # the int64 view of the same sets is rejected, not silently miscounted
+    with pytest.raises(TypeError):
+        intersect_count(va.view(np.int64), oa, vb.view(np.int64), ob)
 
 
 def test_gram_hashes_equals_shingle_hashes():
