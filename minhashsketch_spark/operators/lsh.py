@@ -44,18 +44,6 @@ from pyspark.sql.window import Window
 
 from ..config import PipelineConfig
 
-# salted band tables between these row counts take a shuffle_hash hint on
-# the pair self-join's build side: the per-partition hash build is bounded
-# (~40 B/row) and skipping the two sorts of the band table measurably wins
-# (sf1.0: 6.3->3.5 s / 3.4->2.6 s same-session). Below the low bound the
-# planner's own estimate-driven choice (typically a zero-shuffle broadcast
-# of the few-MB table) is already optimal — forcing a hash join there only
-# adds exchanges (the embedding analogue regressed 4x). Above the high
-# bound the sort-merge join stays — an unbounded hash build is the OOM
-# risk at 10^12 docs.
-HASH_JOIN_BAND_MIN = 1_000_000
-HASH_JOIN_BAND_LIMIT = 50_000_000
-
 
 def explode_bands(signatures: DataFrame) -> DataFrame:
     """(url, sig_key, bands[b]) -> (url, sig_key, band_key)."""
@@ -117,23 +105,8 @@ def candidate_pairs(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # a lazy persist: racing consumers recompute the same partitions.
     salted = eager_if_python(salted)
 
-    # band-row count for the hash-join gate, from whichever frame is cheap
-    # to count: the just-materialized salted checkpoint, or the
-    # table/RDD-backed signature frame (x bands per row). Counting a LAZY
-    # salted frame would re-run its sizes join — never do that.
-    from ..partitioning import _plan_node_names
-
-    salted_nodes = _plan_node_names(salted._jdf.queryExecution().optimizedPlan())
-    if all(n == "LogicalRDD" or n.startswith(("Project", "Filter"))
-           for n in salted_nodes):
-        n_band_rows = salted.count()
-    else:
-        n_band_rows = signatures.count() * cfg.bands
-
     left = salted.select("band_key", "salt", F.col("url").alias("url_a"))
     right = salted.select("band_key", "salt", F.col("url").alias("url_b"))
-    if HASH_JOIN_BAND_MIN < n_band_rows <= HASH_JOIN_BAND_LIMIT:
-        right = right.hint("shuffle_hash")
     within = (
         left.join(right, on=["band_key", "salt"])
         .filter(F.col("url_a") < F.col("url_b"))

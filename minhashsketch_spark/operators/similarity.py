@@ -296,10 +296,6 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     # unconditional localCheckpoint pinned an n x tables frame to executor
     # storage for no recompute saving)
     salted = eager_if_python(salted)
-    # NOTE: no shuffle_hash hint on this self-join (unlike lsh.py's) — the
-    # keyed band table here is a few MB, the planner already broadcasts it
-    # (zero-shuffle BHJ), and forcing a hash join regressed the query 4x
-    # (measured at sf0.1 and sf1.0)
     a = salted.select(F.col("vec_id").alias("id_a"), "tbl", "bucket", "salt")
     bb = salted.select(F.col("vec_id").alias("id_b"), "tbl", "bucket", "salt")
     within = (

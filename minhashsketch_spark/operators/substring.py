@@ -96,20 +96,13 @@ def substring_dup_pairs(docs: DataFrame, k: int = 8, w: int = 16,
     # candidate pairs are <<1% of the corpus by construction (min_shared +
     # max_df pruning): materialize + count them, and when small broadcast
     # the pair spine into the text attaches so the corpus text is never
-    # shuffled, with the b-side hash-joined instead of sort-merged (the fat
-    # pair x text_a intermediate is shuffled once, never sorted). Large
+    # shuffled for the a-side; the planner picks the b-side join. Large
     # candidate sets keep the r5 shuffle-join plan (guide §3.1).
-    from .verify import BROADCAST_PAIR_LIMIT, DIRECT_JOIN_PAIR_LIMIT
+    from .verify import BROADCAST_PAIR_LIMIT
 
     cands = cands.localCheckpoint()
-    n_cands = cands.count()
-    if n_cands <= BROADCAST_PAIR_LIMIT:
+    if cands.count() <= BROADCAST_PAIR_LIMIT:
         cands = F.broadcast(cands)
-        if n_cands > DIRECT_JOIN_PAIR_LIMIT:
-            # tiny candidate sets keep the planner's zero-Exchange
-            # all-broadcast plan; the no-sort hash join only pays once the
-            # (pair x text) intermediate is big enough to matter
-            tb = tb.hint("shuffle_hash")
     joined = cands.join(ta, "url_a").join(tb, "url_b")
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

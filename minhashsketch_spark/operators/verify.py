@@ -40,13 +40,6 @@ from ..core.shingles import distinct_shingles, intersect_count, utf8_views
 # it the joins fall back to the shuffle plans (scale-safe default).  1M pair
 # rows ~ 60 MB framed — comfortably within executor broadcast budgets.
 BROADCAST_PAIR_LIMIT = 1_000_000
-# under THIS count the b-side shuffle_hash hints are dropped too: with a
-# tiny pair set every attach input is tiny, the planner's own stats produce
-# the all-broadcast zero-Exchange plan, and a forced hash-join would ADD
-# two exchanges of pure scheduling latency (measured ~+0.5-1 s/query at
-# sf0.1). The hints only pay once the fat (pair x payload) intermediate is
-# big enough that an estimate-driven plan would sort or mis-broadcast it.
-DIRECT_JOIN_PAIR_LIMIT = 50_000
 
 
 def est_prefilter_gate(cfg: PipelineConfig) -> float:
@@ -70,28 +63,19 @@ def est_prefilter_gate(cfg: PipelineConfig) -> float:
     return max(0.0, cfg.threshold - 6.0 * sigma)
 
 
-def minhash_estimate(pairs: DataFrame, signatures: DataFrame, cfg: PipelineConfig,
-                     broadcast_pairs: bool = False,
-                     hash_join_b_side: bool = False) -> DataFrame:
+def minhash_estimate(pairs: DataFrame, signatures: DataFrame,
+                     cfg: PipelineConfig) -> DataFrame:
     """(url_a, url_b) + signatures -> + est_sim (reference estimator).
 
     m == 1 only: positional zip_with equality IS the two-pointer match
     count when each list has one element. For m > 1 use
     ``minhash_estimate_m`` (positional equality would undercount — see
-    src/Hash.cu:65-78, the pointers advance independently).
-
-    ``broadcast_pairs``: the pair set is known-small (counted by the
-    caller) — broadcast it so the signature table is never shuffled for
-    the a-side attach, and hash-join (no sort) the b-side."""
+    src/Hash.cu:65-78, the pointers advance independently)."""
     if cfg.m != 1:
         raise ValueError("minhash_estimate is the m==1 fast path; "
                          "use minhash_estimate_m for m > 1")
     sig_a = signatures.select(F.col("url").alias("url_a"), F.col("sig").alias("sig_a"))
     sig_b = signatures.select(F.col("url").alias("url_b"), F.col("sig").alias("sig_b"))
-    if broadcast_pairs:
-        pairs = F.broadcast(pairs)
-        if hash_join_b_side:
-            sig_b = sig_b.hint("shuffle_hash")
     return (
         pairs.join(sig_a, "url_a").join(sig_b, "url_b")
         .withColumn(
@@ -209,9 +193,11 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
     LSH design, and after the eager materialization its exact size is one
     cheap count away — when it is under ``BROADCAST_PAIR_LIMIT`` rows the
     pair spine is BROADCAST into every attach join, so the heavy frames
-    (signatures, shingle sets) are never shuffled for the a-side attaches,
-    and the b-side attaches hash-join without sorting the array payloads.
-    Above the limit every join falls back to the previous shuffle plans.
+    (signatures, shingle sets) are never shuffled for the a-side attaches;
+    the planner picks the b-side joins. That one count is the only size
+    decision: the gated spine is a subset of the pre-gate pairs, so the
+    same bound holds for it. Above the limit every join falls back to the
+    shuffle plans.
 
     ``est_gate``: optional est_sim pre-filter applied BEFORE the exact
     verification (shingle recompute + intersect) — pairs below the gate
@@ -239,27 +225,20 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
         pairs = pairs.localCheckpoint()
     # the count is ~free: pairs is either just-materialized executor storage
     # or a parquet stage table whose count comes from footer metadata
-    n_pairs = pairs.count()
-    small = n_pairs <= BROADCAST_PAIR_LIMIT
-    # tiny pair sets keep the planner's own zero-Exchange all-broadcast
-    # plan: a forced hash join would only add exchanges (see gate comment)
-    hash_b = small and n_pairs > DIRECT_JOIN_PAIR_LIMIT
-    est = minhash_estimate(pairs, signatures, cfg, broadcast_pairs=small,
-                           hash_join_b_side=hash_b)
+    small = pairs.count() <= BROADCAST_PAIR_LIMIT
+    est = minhash_estimate(F.broadcast(pairs) if small else pairs,
+                           signatures, cfg)
     # a clamped/zero gate filters nothing — take the ungated plan instead
-    # of paying an extra materialize+count for no pruning
+    # of paying an extra materialize for no pruning
     if est_gate is not None and est_gate > 0.0:
         est = est.filter(F.col("est_sim") >= F.lit(est_gate))
         if small:
             # EAGER: the gated estimate is the new (far smaller) pair
-            # spine — materializing it runs the estimate job once and
-            # makes the surviving-pair count exact for the attach-plan
-            # gates below. Bounded: pre-gate pairs are already under
-            # BROADCAST_PAIR_LIMIT here, so the checkpointed copy is too.
+            # spine, consumed by the shingle url set and the attach joins
+            # — materializing it runs the estimate join once. Bounded:
+            # pre-gate pairs are already under BROADCAST_PAIR_LIMIT here,
+            # so the checkpointed subset is too.
             est = est.localCheckpoint()
-            n_pairs = est.count()
-            small = n_pairs <= BROADCAST_PAIR_LIMIT
-            hash_b = small and n_pairs > DIRECT_JOIN_PAIR_LIMIT
             spine = est
         else:
             # above the broadcast limit nothing pair-scale may enter
@@ -278,12 +257,8 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
     sh_b = sets_df.select(F.col("url").alias("url_b"), F.col("shingles").alias("sh_b"))
     if small:
         # est is pair-sized and light (urls + two doubles): broadcasting it
-        # keeps sh_a unshuffled; past DIRECT_JOIN_PAIR_LIMIT the second
-        # attach hash-joins so the fat (pair x shingle-array) intermediate
-        # is shuffled once, never sorted
+        # keeps sh_a unshuffled
         est = F.broadcast(est)
-        if hash_b:
-            sh_b = sh_b.hint("shuffle_hash")
 
     # a closure, not a module-level function: cloudpickle ships a closure
     # by value, so a Python worker imports only core.shingles (~10 ms), not

@@ -108,13 +108,13 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     gate preserves every is_dup row), so a resume can never mix
     incompatible stage tables.
     """
-    if checkpoint_root is None:
+    if not checkpoint_root:
         import tempfile
 
         checkpoint_root = tempfile.mkdtemp(prefix="mhs_stages_")
         _track_auto_root(checkpoint_root)
     key = stage_key or cfg.config_hash()
-    store = StageStore(spark, checkpoint_root, key) if checkpoint_root else None
+    store = StageStore(spark, checkpoint_root, key)
     # the gate changes only the verified stage's contents: fold it into
     # THAT stage name, so the expensive gate-independent
     # signatures/candidates stages (and the bit-identical clusters) stay
@@ -130,14 +130,12 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                    str(cfg.arrow_batch_rows))
 
     def stage(name: str, build, metrics=None, extra_aggs=None) -> DataFrame:
-        if store is not None and store.exists(name):
+        if store.exists(name):
             return store.read(name)
         t0 = time.time()
-        df = build()
-        if store is not None:
-            df = store.write(name, df,
-                             metrics={} if metrics is None else metrics(),
-                             extra_aggs=extra_aggs)
+        df = store.write(name, build(),
+                         metrics={} if metrics is None else metrics(),
+                         extra_aggs=extra_aggs)
         timings[name] = time.time() - t0
         return df
 
@@ -168,10 +166,9 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                      # reads it from the manifest instead of re-counting
                      extra_aggs={"n_dup_pairs":
                                  F.sum(F.col("is_dup").cast("long"))})
-    n_edges = None
-    if store is not None and store.exists(f"verified{gate_sfx}"):
-        m = store.manifest(f"verified{gate_sfx}").get("metrics", {})
-        n_edges = m.get("n_dup_pairs")
+    # the verified manifest exists here: resumed or just written
+    m = store.manifest(f"verified{gate_sfx}").get("metrics", {})
+    n_edges = m.get("n_dup_pairs")
     # clusters are gate-INDEPENDENT (the gate preserves every is_dup row
     # bit-identically), so the stage name stays unsuffixed and is shared
     # between gated and ungated runs

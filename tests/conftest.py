@@ -6,6 +6,14 @@ import pytest
 os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
 os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
 
+# the reference's own clip FASTAs, read by the parity goldens; tests that
+# need them skip when they are absent
+REFERENCE_CLIPS = "/root/reference/testing_files"
+CLIP_PATHS = [f"{REFERENCE_CLIPS}/sequence_clip{i}.fasta" for i in (1, 2, 3)]
+requires_clips = pytest.mark.skipif(
+    not all(os.path.exists(p) for p in CLIP_PATHS),
+    reason=f"reference clip FASTAs absent from {REFERENCE_CLIPS}")
+
 
 @pytest.fixture(scope="session")
 def spark():

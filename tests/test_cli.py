@@ -3,16 +3,17 @@
 import subprocess
 import sys
 
+from conftest import CLIP_PATHS, requires_clips
+
 
 def _run(*args):
     return subprocess.run([sys.executable, "-m", "minhashsketch_spark", *args],
                           capture_output=True, text=True, timeout=300)
 
 
+@requires_clips
 def test_dna_cli_reference_output():
-    r = _run("dna",
-             "/root/reference/testing_files/sequence_clip1.fasta",
-             "/root/reference/testing_files/sequence_clip2.fasta",
+    r = _run("dna", CLIP_PATHS[0], CLIP_PATHS[1],
              "all", "-e", "--k=5", "--m=10", "--t=10", "--seed=123")
     assert r.returncode == 0
     # golden similarity from the reference's own compiled code
@@ -21,11 +22,9 @@ def test_dna_cli_reference_output():
     assert "sig1:  size:10" in r.stdout
 
 
+@requires_clips
 def test_dna_cli_k_too_large():
-    r = _run("dna",
-             "/root/reference/testing_files/sequence_clip1.fasta",
-             "/root/reference/testing_files/sequence_clip2.fasta",
-             "--k=5000", "--t=1")
+    r = _run("dna", CLIP_PATHS[0], CLIP_PATHS[1], "--k=5000", "--t=1")
     assert r.returncode == 1
     assert "k cannot be greater" in r.stdout  # src/main.cu:222 wording
 

@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from conftest import requires_clips
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -41,9 +42,13 @@ def _norm(rows, cols):
 
 ORACLES = sorted(entry_mod.oracle_sql().keys())
 ALL = sorted(entry_mod.queries().keys())
+# queries over the reference clip FASTAs
+CLIP_QUERIES = {"dna_similarity", "dna_sketches"}
 
 
-@pytest.mark.parametrize("name", ORACLES)
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=requires_clips) if n in CLIP_QUERIES else n
+    for n in ORACLES])
 def test_query_matches_oracle(spark, ddb, name):
     q = entry_mod.queries()[name]
     sdf = q(spark, SF_DIR)

@@ -24,13 +24,14 @@ from minhashsketch_spark.core.rng import INT_MAX, MERSENNE_P, uniform_int
 from minhashsketch_spark.core import spooky
 from minhashsketch_spark.core.sketch import compute_sim_row, compute_sim_two_pointer
 
+from conftest import CLIP_PATHS, requires_clips
+
 HERE = os.path.dirname(__file__)
 GOLD = json.load(open(os.path.join(HERE, "goldens_refcompiled.json")))
-CLIPS = "/root/reference/testing_files"
 
 
 def _clip(n):
-    _, seq = fasta_to_string(f"{CLIPS}/sequence_clip{n}.fasta")
+    _, seq = fasta_to_string(CLIP_PATHS[n - 1])
     return seq
 
 
@@ -73,10 +74,12 @@ def test_spooky_16byte_vs_reference():
         assert got == want
 
 
+@requires_clips
 def test_clip_lengths():
     assert [len(_clip(1)), len(_clip(2)), len(_clip(3))] == GOLD["clip_lens"]
 
 
+@requires_clips
 @pytest.mark.parametrize("n,key", [(1, "sig_clip1_k5"), (2, "sig_clip2_k5"), (3, "sig_clip3_k5")])
 def test_signatures_k5(n, key):
     bs = generate_hashes_b(10, 123)
@@ -84,6 +87,7 @@ def test_signatures_k5(n, key):
     assert sig.tolist() == GOLD[key]
 
 
+@requires_clips
 @pytest.mark.parametrize("n,key", [(1, "sig_clip1_k31"), (2, "sig_clip2_k31")])
 def test_signatures_k31(n, key):
     bs = generate_hashes_b(5, 540484695)
@@ -91,6 +95,7 @@ def test_signatures_k31(n, key):
     assert sig.tolist() == GOLD[key]
 
 
+@requires_clips
 def test_similarities_vs_reference_computeSim():
     bs = generate_hashes_b(10, 123)
     s1 = gen_sig(_clip(1).encode(), 5, 10, 10, hashes_b=bs)

@@ -314,13 +314,11 @@ def test_line_dedup_never_shuffles_text(spark):
             assert not re.search(r"\b(text|line)\b", inp.group(1)), blk
 
 
-def test_verified_pairs_small_path_broadcasts_pair_spine(spark, monkeypatch):
-    """r6: under the pair-count gate the pair spine must be BROADCAST into
-    the attach joins (signatures / shingle sets never shuffled for the
-    a-side); past DIRECT_JOIN_PAIR_LIMIT the b-side attach must hash-join,
-    not sort-merge — the fat (pair x shingle-array) intermediate is
-    shuffled once, never sorted. Below that limit the plan keeps the
-    planner's all-broadcast zero-extra-Exchange shape."""
+def test_verified_pairs_small_path_broadcasts_pair_spine(spark):
+    """Under the pair-count gate the pair spine must be BROADCAST into the
+    attach joins (signatures / shingle sets never shuffled for the
+    a-side), and no attach is forced into a shuffled hash join: the
+    planner keeps its own all-broadcast zero-extra-Exchange shape."""
     from minhashsketch_spark.operators import verify as V
     from minhashsketch_spark.operators.lsh import candidate_pairs
     from minhashsketch_spark.operators.signatures import compute_signatures
@@ -330,18 +328,40 @@ def test_verified_pairs_small_path_broadcasts_pair_spine(spark, monkeypatch):
     docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
     sigs = compute_signatures(docs, cfg).localCheckpoint()
     pairs = candidate_pairs(sigs, cfg)
-    # tiny path: pair spine broadcast, no FORCED hash joins (the planner
-    # keeps its own estimate-driven shape — the r5 status quo — because a
-    # forced exchange is pure scheduling latency at this size)
     plan = _plan(V.verified_pairs(pairs, sigs, docs, cfg, checkpoint_sigs=False))
     assert "BroadcastHashJoin" in plan, plan
     assert "ShuffledHashJoin" not in plan, plan
-    # mid-size path (gate forced down): pair spine broadcast + b-side SHJ
-    monkeypatch.setattr(V, "DIRECT_JOIN_PAIR_LIMIT", 0)
-    plan = _plan(V.verified_pairs(pairs, sigs, docs, cfg, checkpoint_sigs=False))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "ShuffledHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+
+
+def test_candidate_pairs_plans_without_jobs(spark, tmp_path):
+    """Building the band self-join over a parquet-backed signature table
+    is pure planning: no count() probe or other Spark job may run before
+    the caller consumes the pairs."""
+    from minhashsketch_spark.operators.lsh import candidate_pairs
+    from minhashsketch_spark.operators.signatures import compute_signatures
+    from minhashsketch_spark.sources.corpus import corpus_dataframe
+
+    cfg = PipelineConfig(k=9, m=1, t=16, bands=4, rows=4, seed=1, threshold=0.7)
+    docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
+    path = str(tmp_path / "sigs")
+    compute_signatures(docs, cfg).write.parquet(path)
+    sigs = spark.read.parquet(path)
+    sc = spark.sparkContext
+
+    def jobs_in_group(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    pairs, jobs = jobs_in_group("candidate_pairs_build",
+                                lambda: candidate_pairs(sigs, cfg))
+    assert jobs == []
+    # the group is seen at all: consuming the pairs does run jobs in it
+    n, jobs = jobs_in_group("candidate_pairs_consume", pairs.count)
+    assert n > 0 and jobs
 
 
 def test_verified_pairs_intersects_once_in_one_arrow_map(spark):
