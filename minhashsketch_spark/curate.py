@@ -18,7 +18,7 @@ from .operators.dedup_corpus import (
 )
 from .operators.text import detected_lang_expr, quality_score_expr
 from .operators.verify import est_prefilter_gate
-from .pipeline import _track_auto_root, input_fingerprint, run_pipeline
+from .pipeline import _auto_checkpoint_root, input_fingerprint, run_pipeline
 from .sources.io import StageStore
 
 
@@ -67,13 +67,9 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     Stage keys fold an INPUT fingerprint in with the config hash: re-running
     against the same persistent checkpoint dir with a different --input must
     re-run the stages, not silently return the old corpus's output. An
-    auto-created (None) checkpoint root is removed at interpreter exit.
+    auto-created checkpoint root (None or "") is removed at interpreter exit.
     """
-    if checkpoint_root is None:
-        import tempfile
-
-        checkpoint_root = tempfile.mkdtemp(prefix="mhs_curate_")
-        _track_auto_root(checkpoint_root)
+    checkpoint_root = checkpoint_root or _auto_checkpoint_root("mhs_curate_")
     stage_key = f"{cfg.config_hash()}-{input_fingerprint(docs)}"
     if robots is not None:
         # the checkpointed stages depend on the robots policy too: a
@@ -115,13 +111,14 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     # expressions): joining reduced (url, score) frames back would re-plan
     # the near-dedup anti-join once per join side — three corpus scans +
     # three anti-join shuffles at 100 TB for what is a narrow map
-    curated = near.filter(
+    filtered = near.filter(
         (quality_score_expr(text_col) >= min_quality)
         & detected_lang_expr(text_col).isin(*langs))
+    curated = filtered
     if benchmark is not None:
         from .operators.decontam import decontaminate
 
-        curated = decontaminate(curated, benchmark, n=decontam_n,
+        curated = decontaminate(filtered, benchmark, n=decontam_n,
                                 id_col=url_col, text_col=text_col,
                                 bench_text_col=text_col)
     if with_accounting:
@@ -129,10 +126,7 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
         if robots is not None:
             accounting["after_robots"] = docs.count()
         accounting["after_near_dedup"] = near.count()
-        accounting["after_quality_lang"] = curated.count() \
-            if benchmark is None else near.filter(
-                (quality_score_expr(text_col) >= min_quality)
-                & detected_lang_expr(text_col).isin(*langs)).count()
+        accounting["after_quality_lang"] = filtered.count()
         if benchmark is not None:
             accounting["after_decontam"] = curated.count()
     return {"curated": curated, "accounting": accounting,

@@ -13,6 +13,7 @@ import atexit
 import hashlib
 import json
 import shutil
+import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,10 +38,14 @@ def _cleanup_auto_roots() -> None:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _track_auto_root(root: str) -> None:
+def _auto_checkpoint_root(prefix: str) -> str:
+    """A fresh temp checkpoint root, removed at interpreter exit — for
+    callers given no checkpoint_root (None or "")."""
+    root = tempfile.mkdtemp(prefix=prefix)
     if not _AUTO_ROOTS:
         atexit.register(_cleanup_auto_roots)
     _AUTO_ROOTS.append(root)
+    return root
 
 
 def input_fingerprint(docs: DataFrame) -> str:
@@ -108,11 +113,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     gate preserves every is_dup row), so a resume can never mix
     incompatible stage tables.
     """
-    if not checkpoint_root:
-        import tempfile
-
-        checkpoint_root = tempfile.mkdtemp(prefix="mhs_stages_")
-        _track_auto_root(checkpoint_root)
+    checkpoint_root = checkpoint_root or _auto_checkpoint_root("mhs_stages_")
     key = stage_key or cfg.config_hash()
     store = StageStore(spark, checkpoint_root, key)
     # the gate changes only the verified stage's contents: fold it into
@@ -162,7 +163,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                                             checkpoint_sigs=False,
                                             checkpoint_pairs=False,
                                             est_gate=est_gate),
-                     # counted inside the lineage job — the clusters stage
+                     # observed on the stage write — the clusters stage
                      # reads it from the manifest instead of re-counting
                      extra_aggs={"n_dup_pairs":
                                  F.sum(F.col("is_dup").cast("long"))})

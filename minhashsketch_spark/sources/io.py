@@ -12,8 +12,9 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -25,13 +26,17 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
+def read_table(spark: SparkSession, path: str,
+               schema: StructType | None = None) -> DataFrame:
+    """``schema``: the table's known schema — a parquet read then skips the
+    footer-inference job a schema-less read runs."""
     if iceberg_available(spark) and not path.endswith(".parquet"):
         try:
             return spark.read.format("iceberg").load(path)
         except Exception:
             pass
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -42,6 +47,23 @@ def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
         except Exception:
             pass
     df.write.mode(mode).parquet(path)
+
+
+def _footer_row_counts(spark: SparkSession, files: list[str]) -> list[int]:
+    """Row count of each parquet file, from its footer: driver-side reads
+    through the file's Hadoop FileSystem, no Spark job."""
+    jvm = spark._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    counts = []
+    for f in files:
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), hconf))
+        try:
+            counts.append(int(reader.getRecordCount()))
+        finally:
+            reader.close()
+    return counts
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str,
@@ -130,29 +152,28 @@ class StageStore:
 
     def write(self, stage: str, df: DataFrame, metrics: dict | None = None,
               extra_aggs: dict | None = None) -> DataFrame:
-        """``extra_aggs``: named aggregate Columns (e.g. a dup-pair count)
-        computed in the SAME job as the per-partition lineage counts —
-        downstream stages read them from the manifest instead of paying an
-        extra count() over the checkpointed table."""
-        from pyspark.sql import functions as F
-
+        """Write ``df`` as ``stage`` and its manifest, with no Spark job
+        beyond the write's own. The row count and the ``extra_aggs``
+        totals (named aggregate Columns, e.g. a dup-pair count that
+        downstream stages read from the manifest instead of paying an
+        extra count()) are observed on the write; the per-partition
+        lineage is the footer row count of each part file written."""
         path = self._path(stage)
-        write_table(df, path)
-        out = read_table(self.spark, path)
-        # per-partition lineage: row counts per partition of the written
-        # table (north_rule: "per-partition lineage + metrics") — skew in
-        # these numbers is the first thing to look at when a stage is slow
-        aggs = [F.count("*").alias("count")]
-        aggs += [expr.alias(f"_x_{k}") for k, expr in (extra_aggs or {}).items()]
-        per = (out.groupBy(F.spark_partition_id().alias("pid")).agg(*aggs)
-               .orderBy("pid").collect())
-        ppart = [r["count"] for r in per]
-        extra_totals = {k: int(sum(r[f"_x_{k}"] or 0 for r in per))
-                        for k in (extra_aggs or {})}
+        extra_aggs = extra_aggs or {}
+        obs = Observation()
+        write_table(df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                               *[e.alias(k) for k, e in extra_aggs.items()]),
+                    path)
+        totals = obs.get
+        out = read_table(self.spark, path, schema=df.schema)
+        # per-partition lineage (north_rule: "per-partition lineage +
+        # metrics"): skew in these numbers is the first thing to look at
+        # when a stage is slow
+        ppart = _footer_row_counts(self.spark, sorted(out.inputFiles()))
         manifest = {
             "stage": stage,
             "config_hash": self.config_hash,
-            "rows": int(sum(ppart)),
+            "rows": int(totals["rows"]),
             "partitions": len(ppart),
             "partition_rows": ppart[:256],
             "partition_row_stats": {
@@ -160,7 +181,8 @@ class StageStore:
                 "max": max(ppart) if ppart else 0,
                 "mean": round(sum(ppart) / len(ppart), 1) if ppart else 0,
             },
-            "metrics": {**(metrics or {}), **extra_totals},
+            "metrics": {**(metrics or {}),
+                        **{k: int(totals[k] or 0) for k in extra_aggs}},
         }
         tmp = self._manifest_path(stage) + ".tmp"
         with open(tmp, "w") as f:

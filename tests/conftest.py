@@ -15,6 +15,18 @@ requires_clips = pytest.mark.skipif(
     reason=f"reference clip FASTAs absent from {REFERENCE_CLIPS}")
 
 
+def jobs_in_group(spark, group, action):
+    """Run ``action()`` under job group ``group``; returns its result and
+    the ids of the Spark jobs it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

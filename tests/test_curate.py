@@ -59,6 +59,17 @@ def test_curate_keeper_best_keeps_highest_quality(spark, tmp_path):
     assert kept_best == {"u-b", "u-z"}  # higher quality (no digit penalty)
 
 
+def test_curate_empty_checkpoint_root_uses_temp_root(spark, tmp_path,
+                                                   monkeypatch):
+    """checkpoint_root="" means no root given, as in run_pipeline: every
+    stage goes to an auto-removed temp root, nothing into the working
+    directory."""
+    monkeypatch.chdir(tmp_path)
+    docs_df, _ = corpus_dataframe(spark, n_docs=40, seed=21)
+    curate(spark, docs_df, CFG, checkpoint_root="", with_accounting=False)
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_curate_with_benchmark_decontaminates(spark):
     """--benchmark wiring: a benchmark built from one surviving doc's text
     must remove exactly the docs sharing a 13-gram with it (itself + any

@@ -22,6 +22,8 @@ from minhashsketch_spark.operators.verify import verified_pairs
 from minhashsketch_spark.pipeline import clusters_to_pairs, dup_pair_recall, run_pipeline
 from minhashsketch_spark.sources.corpus import corpus_dataframe, generate_corpus
 
+from conftest import jobs_in_group
+
 CFG = PipelineConfig(k=9, m=1, t=32, bands=8, rows=4, seed=7, threshold=0.7)
 
 
@@ -326,7 +328,7 @@ def test_input_fingerprint_detects_in_place_rewrite(spark, tmp_path):
 
 def test_verified_manifest_carries_dup_pair_count(spark, tmp_path):
     """The clusters stage reads n_dup_pairs from the verified manifest
-    (computed inside the lineage job) instead of re-counting the edges."""
+    (observed on the stage write) instead of re-counting the edges."""
     from minhashsketch_spark.sources.io import StageStore
 
     docs_df, _ = corpus_dataframe(spark, n_docs=80, seed=13)
@@ -335,6 +337,34 @@ def test_verified_manifest_carries_dup_pair_count(spark, tmp_path):
     store = StageStore(spark, root, CFG.config_hash())
     m = store.manifest("verified")["metrics"]
     assert m["n_dup_pairs"] == r["verified"].filter("is_dup").count()
+
+
+def test_stage_write_is_one_job(spark, tmp_path):
+    """A stage write of a frame with no shuffle submits exactly ONE Spark
+    job — the write. Rows and extra_aggs totals are observed on it, the
+    per-partition lineage comes from the part-file footers and the table
+    is read back with the written schema (no inference job)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from minhashsketch_spark.sources.io import StageStore
+
+    df = spark.range(0, 1000, 1, 4).selectExpr("id", "id % 3 = 0 AS is_dup")
+    store = StageStore(spark, str(tmp_path / "ckpt"), "k")
+    out, jobs = jobs_in_group(spark, "stage_write", lambda: store.write(
+        "s", df, extra_aggs={"n_dup": F.sum(F.col("is_dup").cast("long"))}))
+    assert len(jobs) == 1, jobs
+    m = store.manifest("s")
+    assert m["rows"] == df.count() == 1000
+    assert m["metrics"]["n_dup"] == df.agg(
+        F.sum(F.col("is_dup").cast("long"))).first()[0]
+    path = str(tmp_path / "ckpt" / "k" / "s")
+    parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+    assert m["partition_rows"] == [
+        pq.read_metadata(os.path.join(path, f)).num_rows for f in parts]
+    assert m["partitions"] == len(parts)
+    assert out.schema == spark.read.parquet(path).schema
 
 
 def test_containment_asymmetric_overlap(spark):

@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from minhashsketch_spark.config import PipelineConfig
 
+from conftest import jobs_in_group
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -346,21 +348,12 @@ def test_candidate_pairs_plans_without_jobs(spark, tmp_path):
     path = str(tmp_path / "sigs")
     compute_signatures(docs, cfg).write.parquet(path)
     sigs = spark.read.parquet(path)
-    sc = spark.sparkContext
 
-    def jobs_in_group(group, action):
-        sc.setJobGroup(group, group)
-        try:
-            out = action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-    pairs, jobs = jobs_in_group("candidate_pairs_build",
+    pairs, jobs = jobs_in_group(spark, "candidate_pairs_build",
                                 lambda: candidate_pairs(sigs, cfg))
     assert jobs == []
     # the group is seen at all: consuming the pairs does run jobs in it
-    n, jobs = jobs_in_group("candidate_pairs_consume", pairs.count)
+    n, jobs = jobs_in_group(spark, "candidate_pairs_consume", pairs.count)
     assert n > 0 and jobs
 
 
