@@ -64,10 +64,13 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full MinHash+LSH near-dup pipeline on sf0.001 documents."""
+    """Flagship: full MinHash+LSH near-dup pipeline on sf0.001 documents,
+    returned as its exact-verified candidate table."""
     docs = _docs_as_urls(spark, "/root/testdata/sf0.001")
     result = run_pipeline(spark, docs, CFG)
-    return result["verified"].orderBy("url_a", "url_b")
+    return verified_pairs(result["candidates"], result["signatures"], docs, CFG,
+                          checkpoint_sigs=False, checkpoint_pairs=False
+                          ).orderBy("url_a", "url_b")
 
 
 # ---------------------------------------------------------------- queries

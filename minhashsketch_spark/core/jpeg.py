@@ -165,13 +165,19 @@ def decode_baseline_jpeg(buf: bytes) -> np.ndarray:
     while i < len(buf):
         if buf[i] != 0xFF:
             raise ValueError("bad JPEG marker alignment")
+        if i + 2 > len(buf):
+            raise ValueError("truncated JPEG stream (marker)")
         marker = buf[i + 1]
         if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
             i += 2
             continue
         if marker == 0xD9:           # EOI
             break
+        if i + 4 > len(buf):
+            raise ValueError("truncated JPEG stream (segment length)")
         seglen = int.from_bytes(buf[i + 2:i + 4], "big")
+        if seglen < 2 or i + 2 + seglen > len(buf):
+            raise ValueError("truncated JPEG segment")
         seg = buf[i + 4:i + 2 + seglen]
         if marker == 0xDB:           # DQT (possibly several tables)
             j = 0

@@ -17,7 +17,6 @@ from .operators.dedup_corpus import (
     near_dedup_corpus_best,
 )
 from .operators.text import detected_lang_expr, quality_score_expr
-from .operators.verify import est_prefilter_gate
 from .pipeline import _auto_checkpoint_root, input_fingerprint, run_pipeline
 from .sources.io import StageStore
 
@@ -57,8 +56,8 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     member survives — keeper selection must see the full cluster).
 
     The exact-dedup output is checkpointed through the same StageStore as
-    the pipeline stages: it has three downstream consumers (signatures,
-    verification's text lookup, keeper anti-join) that must not each
+    the pipeline stages: it has two downstream consumers (signatures,
+    keeper anti-join) that must not each
     re-plan the dedup anti-join, and it makes the whole curation resumable
     per stage. ``with_accounting=False`` skips the step row counts that
     aren't already free from stage manifests (the counts are monitoring,
@@ -93,13 +92,9 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
 
     if keeper not in ("min", "best"):
         raise ValueError(f"keeper must be 'min' or 'best', got {keeper!r}")
-    # curation consumes only clusters / is_dup from the pipeline, so the
-    # 6-sigma est pre-gate is safe here and skips exact-verifying the ~98%
-    # of LSH candidates that are random band collisions (verify.py)
     result = run_pipeline(spark, exact, cfg, checkpoint_root=checkpoint_root,
                           url_col=url_col, text_col=text_col,
-                          stage_key=stage_key,
-                          est_gate=est_prefilter_gate(cfg))
+                          stage_key=stage_key)
     if keeper == "best":
         near = near_dedup_corpus_best(exact, result["clusters"],
                                       quality_score_expr(text_col),

@@ -23,7 +23,7 @@ from .config import PipelineConfig
 from .operators.connected_components import connected_components
 from .operators.lsh import bucket_stats, candidate_pairs, explode_bands
 from .operators.signatures import compute_signatures
-from .operators.verify import est_prefilter_gate, verified_pairs
+from .operators.verify import BROADCAST_PAIR_LIMIT, minhash_estimate
 from .sources.io import StageStore
 
 # auto-created checkpoint roots (no caller-provided checkpoint_root): each
@@ -83,8 +83,7 @@ def input_fingerprint(docs: DataFrame) -> str:
 def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                  checkpoint_root: str | None = None,
                  url_col: str = "url", text_col: str = "text",
-                 stage_key: str | None = None,
-                 est_gate: float | None = None) -> dict[str, DataFrame]:
+                 stage_key: str | None = None) -> dict[str, DataFrame]:
     """Returns {"signatures", "candidates", "verified", "clusters"} DataFrames.
 
     With ``checkpoint_root`` set, each stage is persisted and a re-run skips
@@ -100,30 +99,14 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     fingerprint into it (see ``input_fingerprint``) or a re-run on a
     different corpus would silently resume from the old corpus's stages.
 
-    ``est_gate``: optional est_sim pre-gate forwarded to ``verified_pairs``
-    — the verified stage then contains only pairs at or above the gate.
-    Default None (full verified table) because this function's verified
-    output is a public surface (``entry()`` returns it verbatim); callers
-    that only consume ``clusters`` / ``is_dup`` (curate) pass
-    ``est_prefilter_gate(cfg)`` and skip exact-verifying the ~98% of LSH
-    candidates that are random band collisions. The gate is folded into
-    the VERIFIED stage's name only: signatures/candidates are
-    gate-independent and stay shared across gated/ungated runs on the
-    same checkpoint root, and clusters are bit-identical either way (the
-    gate preserves every is_dup row), so a resume can never mix
-    incompatible stage tables.
+    The verified stage is the reference estimator's verdict:
+    (url_a, url_b, est_sim, is_dup) with is_dup = est_sim >= threshold,
+    which is all the clusters stage reads. Exact Jaccard is left to
+    ``verified_pairs``, for callers that read it.
     """
     checkpoint_root = checkpoint_root or _auto_checkpoint_root("mhs_stages_")
     key = stage_key or cfg.config_hash()
     store = StageStore(spark, checkpoint_root, key)
-    # the gate changes only the verified stage's contents: fold it into
-    # THAT stage name, so the expensive gate-independent
-    # signatures/candidates stages (and the bit-identical clusters) stay
-    # shared between gated and ungated runs on the same checkpoint_root.
-    # repr of the float is exact (it round-trips), so two gates never share
-    # a verified stage however close they are
-    gate_sfx = (f"-g{float(est_gate)!r}"
-                if est_gate is not None and est_gate > 0.0 else "")
     timings: dict[str, float] = {}
     # Arrow batch sizing for the signature UDF — the analogue of the
     # reference's CHUNKS sizing (src/MinhashSketch.cu:304-330)
@@ -154,25 +137,19 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
 
     candidates = stage("candidates", lambda: candidate_pairs(signatures, cfg),
                        metrics=cand_metrics)
-    verified = stage(f"verified{gate_sfx}",
-                     # signatures + candidates are parquet stage tables here:
-                     # re-planning them is ~free, so skip verified_pairs'
-                     # executor-storage copies (localCheckpoint) of both
-                     lambda: verified_pairs(candidates, signatures, docs, cfg,
-                                            url_col, text_col,
-                                            checkpoint_sigs=False,
-                                            checkpoint_pairs=False,
-                                            est_gate=est_gate),
-                     # observed on the stage write — the clusters stage
-                     # reads it from the manifest instead of re-counting
-                     extra_aggs={"n_dup_pairs":
-                                 F.sum(F.col("is_dup").cast("long"))})
-    # the verified manifest exists here: resumed or just written
-    m = store.manifest(f"verified{gate_sfx}").get("metrics", {})
-    n_edges = m.get("n_dup_pairs")
-    # clusters are gate-INDEPENDENT (the gate preserves every is_dup row
-    # bit-identically), so the stage name stays unsuffixed and is shared
-    # between gated and ungated runs
+    # the candidates manifest exists here (resumed or just written): its
+    # row count sizes the broadcast without a count() job
+    small = store.manifest("candidates")["rows"] <= BROADCAST_PAIR_LIMIT
+    verified = stage(
+        "verified",
+        lambda: minhash_estimate(F.broadcast(candidates) if small else candidates,
+                                 signatures, cfg)
+        .select("url_a", "url_b", "est_sim",
+                (F.col("est_sim") >= F.lit(cfg.threshold)).alias("is_dup")),
+        # observed on the stage write — the clusters stage reads it from
+        # the manifest instead of re-counting
+        extra_aggs={"n_dup_pairs": F.sum(F.col("is_dup").cast("long"))})
+    n_edges = store.manifest("verified").get("metrics", {}).get("n_dup_pairs")
     clusters = stage("clusters",
                      lambda: connected_components(
                          verified.filter("is_dup").select("url_a", "url_b"),

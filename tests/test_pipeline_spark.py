@@ -226,6 +226,60 @@ def test_est_gate_preserves_thresholded_outputs(spark):
     assert gated.count() < full.count()
 
 
+def _small_vocab_docs(spark, prefix, n, seed, suffix=""):
+    """Docs of 30-60 words drawn from an 8-word vocabulary: unrelated docs
+    share many shingles, so LSH emits pairs on both sides of the gate.
+    The same seed gives the same texts, before ``suffix``."""
+    rng = np.random.RandomState(seed)
+    vocab = ["alpha", "bravo", "delta", "echo", "golf", "hotel", "kilo", "lima"]
+    rows = [(f"{prefix}-{i:04d}",
+             " ".join(rng.choice(vocab, size=rng.randint(30, 61))) + suffix)
+            for i in range(n)]
+    return spark.createDataFrame(rows, "url string, text string")
+
+
+def _xrows(df):
+    return sorted((r["url_new"], r["url_idx"], r["est_sim"], r["jaccard"],
+                   r["is_dup"]) for r in df.collect())
+
+
+def test_est_gate_is_a_no_op_at_small_t(spark):
+    """At t=16 / threshold 0.7 the gate is ~0.013, below the smallest
+    non-zero estimate (1/16): the gated cross-corpus surface drops only
+    the est_sim == 0 rows of the ungated one, sub-threshold rows included."""
+    from minhashsketch_spark.operators.cross_dedup import cross_corpus_dup_pairs
+    from minhashsketch_spark.operators.verify import est_prefilter_gate
+
+    cfg = PipelineConfig(k=9, m=1, t=16, bands=16, rows=1, seed=7, threshold=0.7)
+    assert 0.0 < est_prefilter_gate(cfg) < 1 / cfg.t
+    new = _small_vocab_docs(spark, "new", 20, seed=1)
+    idx = _small_vocab_docs(spark, "idx", 60, seed=2)
+    gated = _xrows(cross_corpus_dup_pairs(new, idx, cfg, est_gate="auto"))
+    full = _xrows(cross_corpus_dup_pairs(new, idx, cfg, est_gate=None))
+    assert gated == [r for r in full if r[2] != 0.0]
+    assert any(r[2] < cfg.threshold for r in gated)  # nothing risky pruned
+
+
+def test_est_gate_envelope_at_flagship_t(spark):
+    """At t=128 the gate (~0.457) prunes: no emitted row falls below it,
+    and the jaccard >= threshold rows are those of the ungated run."""
+    from minhashsketch_spark.operators.cross_dedup import cross_corpus_dup_pairs
+    from minhashsketch_spark.operators.verify import est_prefilter_gate
+
+    cfg = PipelineConfig.from_threshold(k=9, m=1, t=128, threshold=0.7, seed=42)
+    gate = est_prefilter_gate(cfg)
+    # near-copies of the first index docs, and unrelated docs
+    new = (_small_vocab_docs(spark, "copy", 10, seed=4, suffix=" zulu")
+           .unionByName(_small_vocab_docs(spark, "new", 20, seed=3)))
+    idx = _small_vocab_docs(spark, "idx", 60, seed=4)
+    gated = _xrows(cross_corpus_dup_pairs(new, idx, cfg, est_gate="auto"))
+    full = _xrows(cross_corpus_dup_pairs(new, idx, cfg, est_gate=None))
+    assert all(r[2] >= gate for r in gated)
+    assert len(gated) < len(full)  # the gate prunes on this corpus
+    keep = [r for r in full if r[3] >= cfg.threshold]
+    assert keep and keep == [r for r in gated if r[3] >= cfg.threshold]
+
+
 def test_resume_byte_identical(spark, tmp_path):
     cfg = CFG
     docs_df, _ = corpus_dataframe(spark, n_docs=80, seed=13)
@@ -239,25 +293,47 @@ def test_resume_byte_identical(spark, tmp_path):
     assert c1 == c2
 
 
-def test_distinct_gates_get_distinct_verified_stages(spark, tmp_path):
-    """Two est gates that agree to six decimals must not share a verified
-    stage on one checkpoint root: a resume under one gate would return the
-    other gate's (larger or smaller) verified table."""
-    import os
+def test_verified_stage_is_the_estimate_spine(spark):
+    """run_pipeline's verified stage is verified_pairs over the same
+    candidates and signatures without the exact columns: same rows, and
+    its is_dup rows are those of a run gated at est_prefilter_gate."""
+    from minhashsketch_spark.operators.verify import est_prefilter_gate
 
+    docs_df, _ = corpus_dataframe(spark, n_docs=80, seed=13)
+    r = run_pipeline(spark, docs_df, CFG)
+    cols = ["url_a", "url_b", "est_sim", "is_dup"]
+    assert r["verified"].columns == cols
+    got = sorted(tuple(x) for x in r["verified"].collect())
+    full = verified_pairs(r["candidates"], r["signatures"], docs_df, CFG,
+                          checkpoint_sigs=False, checkpoint_pairs=False)
+    assert got == sorted(tuple(x) for x in full.select(*cols).collect())
+    gated = verified_pairs(r["candidates"], r["signatures"], docs_df, CFG,
+                           checkpoint_sigs=False, checkpoint_pairs=False,
+                           est_gate=est_prefilter_gate(CFG))
+    dups = [x for x in got if x[3]]
+    assert dups and dups == sorted(
+        tuple(x) for x in gated.filter("is_dup").select(*cols).collect())
+
+
+def test_verified_stage_runs_no_python_map(spark, tmp_path, monkeypatch):
+    """The frame written as the verified stage is JVM-only: no shingle
+    recompute or intersection map runs to build it."""
+    from minhashsketch_spark.partitioning import _PYTHON_EVAL_NODES, _plan_node_names
+    from minhashsketch_spark.sources.io import StageStore
+
+    written = {}
+    orig = StageStore.write
+
+    def write(self, stage, df, **kw):
+        written[stage] = df
+        return orig(self, stage, df, **kw)
+
+    monkeypatch.setattr(StageStore, "write", write)
     docs_df, _ = corpus_dataframe(spark, n_docs=40, seed=13)
-    root = str(tmp_path / "ckpt")
-    g1, g2 = 0.5, 0.5 + 1e-9
-    run_pipeline(spark, docs_df, CFG, checkpoint_root=root, est_gate=g1)
-    r2 = run_pipeline(spark, docs_df, CFG, checkpoint_root=root, est_gate=g2)
-    assert [s for s in r2["timings"] if s.startswith("verified")], r2["timings"]
-    base = os.path.join(root, CFG.config_hash())
-    stages = [f for f in os.listdir(base)
-              if f.startswith("verified") and f.endswith(".manifest.json")]
-    assert len(stages) == 2, stages
-    # and each gate resumes from its own stage
-    r3 = run_pipeline(spark, docs_df, CFG, checkpoint_root=root, est_gate=g1)
-    assert r3["timings"] == {}
+    run_pipeline(spark, docs_df, CFG, checkpoint_root=str(tmp_path / "ckpt"))
+    names = _plan_node_names(
+        written["verified"]._jdf.queryExecution().optimizedPlan())
+    assert not [n for n in names for k in _PYTHON_EVAL_NODES if n.startswith(k)], names
 
 
 def test_byte_identical_text_invariant(spark):
