@@ -1174,7 +1174,7 @@ def _q_curated_corpus(spark, sf_dir):
     from minhashsketch_spark.curate import curate
 
     res = curate(spark, _docs_as_urls(spark, sf_dir), CFG,
-                 min_quality=20.0, langs=("en",), with_accounting=False)
+                 min_quality=20.0, langs=("en",))
     return res["curated"].select("url")
 
 

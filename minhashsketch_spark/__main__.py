@@ -95,9 +95,9 @@ def _pipeline(argv: list[str]) -> None:
     p.add_argument("--cpus", default="*")
     a = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
 
-    from .config import PipelineConfig
     from .pipeline import input_fingerprint, run_pipeline
     from .sources.io import read_table, write_table
 
@@ -114,9 +114,11 @@ def _pipeline(argv: list[str]) -> None:
     key = f"{cfg.config_hash()}-{input_fingerprint(docs)}" if a.checkpoint else None
     result = run_pipeline(spark, docs, cfg, checkpoint_root=a.checkpoint,
                           stage_key=key)
-    write_table(result["clusters"], a.output)
-    n = read_table(spark, a.output).count()
-    print(f"clusters written: {n} rows -> {a.output}")
+    # the row count is observed on the output write, not re-read from it
+    written = Observation()
+    write_table(result["clusters"].observe(written, F.count(F.lit(1)).alias("rows")),
+                a.output)
+    print(f"clusters written: {written.get['rows']} rows -> {a.output}")
 
 
 def _curate(argv: list[str]) -> None:

@@ -8,7 +8,11 @@ training-data pipeline actually runs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
+import json
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .config import PipelineConfig
 from .operators.dedup_corpus import (
@@ -21,15 +25,23 @@ from .pipeline import _auto_checkpoint_root, input_fingerprint, run_pipeline
 from .sources.io import StageStore
 
 
+def _observed(df: DataFrame, step: str, steps: list[Observation]) -> DataFrame:
+    """``df`` with its row count observed as ``step`` (appended to ``steps``)."""
+    obs = Observation()
+    steps.append(obs)
+    return df.observe(obs, F.count(F.lit(1)).alias(step))
+
+
 def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
            min_quality: float = 20.0, langs: tuple[str, ...] = ("en",),
            checkpoint_root: str | None = None,
            url_col: str = "url", text_col: str = "text",
-           with_accounting: bool = True, keeper: str = "min",
+           keeper: str = "min",
            benchmark: DataFrame | None = None,
            decontam_n: int = 13,
            robots: DataFrame | None = None) -> dict:
-    """Returns {"curated": DataFrame, "accounting": dict of step -> rows}.
+    """Returns {"curated", "accounting", "clusters"}; ``accounting`` maps
+    each step to its row count, in pipeline order.
 
     ``robots``: optional (domain, robots_txt) frame — when given, a
     robots.txt compliance filter runs FIRST: it is the cheapest stage (a
@@ -55,19 +67,21 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     near-dup work, but running them first would change which cluster
     member survives — keeper selection must see the full cluster).
 
-    The exact-dedup output is checkpointed through the same StageStore as
-    the pipeline stages: it has two downstream consumers (signatures,
-    keeper anti-join) that must not each
-    re-plan the dedup anti-join, and it makes the whole curation resumable
-    per stage. ``with_accounting=False`` skips the step row counts that
-    aren't already free from stage manifests (the counts are monitoring,
-    not semantics).
+    The exact-dedup output and the curated corpus are stages of the same
+    StageStore as the pipeline stages, so the curation resumes per stage.
+    Exact dedup has two consumers (signatures, keeper anti-join) that must
+    not each re-plan its anti-join; the curated stage is keyed by the
+    post-pipeline parameters, and the caller's write of ``curated`` is a
+    parquet copy. Each step count is observed on the stage write its rows
+    flow into and read from the manifests: no step runs a count() job.
 
     Stage keys fold an INPUT fingerprint in with the config hash: re-running
     against the same persistent checkpoint dir with a different --input must
     re-run the stages, not silently return the old corpus's output. An
     auto-created checkpoint root (None or "") is removed at interpreter exit.
     """
+    if keeper not in ("min", "best"):
+        raise ValueError(f"keeper must be 'min' or 'best', got {keeper!r}")
     checkpoint_root = checkpoint_root or _auto_checkpoint_root("mhs_curate_")
     stage_key = f"{cfg.config_hash()}-{input_fingerprint(docs)}"
     if robots is not None:
@@ -76,53 +90,54 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
         stage_key += f"-r{input_fingerprint(robots)}"
     store = StageStore(spark, checkpoint_root, stage_key)
 
-    n_input = docs.count() if with_accounting else None
-    if robots is not None:
-        from .operators.robots import filter_robots_disallowed
-
-        docs = filter_robots_disallowed(docs, robots, url_col=url_col)
-
     if store.exists("exact_dedup"):
         exact = store.read("exact_dedup")
     else:
+        steps: list[Observation] = []
+        docs = _observed(docs, "input", steps)
+        if robots is not None:
+            from .operators.robots import filter_robots_disallowed
+
+            docs = _observed(filter_robots_disallowed(docs, robots, url_col=url_col),
+                             "after_robots", steps)
         exact = store.write("exact_dedup",
                             exact_dedup_corpus(docs, id_col=url_col,
-                                               text_col=text_col))
-    accounting = {"after_exact_dedup": store.manifest("exact_dedup")["rows"]}
+                                               text_col=text_col),
+                            observed=tuple(steps))
 
-    if keeper not in ("min", "best"):
-        raise ValueError(f"keeper must be 'min' or 'best', got {keeper!r}")
     result = run_pipeline(spark, exact, cfg, checkpoint_root=checkpoint_root,
                           url_col=url_col, text_col=text_col,
                           stage_key=stage_key)
-    if keeper == "best":
-        near = near_dedup_corpus_best(exact, result["clusters"],
-                                      quality_score_expr(text_col),
-                                      url_col=url_col)
+    params = [keeper, min_quality, sorted(langs), decontam_n,
+              None if benchmark is None else input_fingerprint(benchmark)]
+    post = "curated-" + hashlib.sha256(json.dumps(params).encode()).hexdigest()[:12]
+    last = "after_quality_lang" if benchmark is None else "after_decontam"
+    if store.exists(post):
+        curated = store.read(post)
     else:
-        near = near_dedup_corpus(exact, result["clusters"], url_col=url_col)
-
-    # per-row filters apply INLINE on the survivors (pure Column
-    # expressions): joining reduced (url, score) frames back would re-plan
-    # the near-dedup anti-join once per join side — three corpus scans +
-    # three anti-join shuffles at 100 TB for what is a narrow map
-    filtered = near.filter(
-        (quality_score_expr(text_col) >= min_quality)
-        & detected_lang_expr(text_col).isin(*langs))
-    curated = filtered
-    if benchmark is not None:
-        from .operators.decontam import decontaminate
-
-        curated = decontaminate(filtered, benchmark, n=decontam_n,
-                                id_col=url_col, text_col=text_col,
-                                bench_text_col=text_col)
-    if with_accounting:
-        accounting["input"] = n_input
-        if robots is not None:
-            accounting["after_robots"] = docs.count()
-        accounting["after_near_dedup"] = near.count()
-        accounting["after_quality_lang"] = filtered.count()
+        steps = []
+        if keeper == "best":
+            near = near_dedup_corpus_best(exact, result["clusters"],
+                                          quality_score_expr(text_col),
+                                          url_col=url_col)
+        else:
+            near = near_dedup_corpus(exact, result["clusters"], url_col=url_col)
+        # per-row filters apply INLINE on the survivors (pure Column
+        # expressions): joining reduced (url, score) frames back would
+        # re-plan the near-dedup anti-join once per join side
+        curated = _observed(near, "after_near_dedup", steps).filter(
+            (quality_score_expr(text_col) >= min_quality)
+            & detected_lang_expr(text_col).isin(*langs))
         if benchmark is not None:
-            accounting["after_decontam"] = curated.count()
+            from .operators.decontam import decontaminate
+
+            curated = decontaminate(_observed(curated, "after_quality_lang", steps),
+                                    benchmark, n=decontam_n, id_col=url_col,
+                                    text_col=text_col, bench_text_col=text_col)
+        curated = store.write(post, curated, observed=tuple(steps))
+
+    ex, cur = store.manifest("exact_dedup"), store.manifest(post)
+    accounting = {**ex["metrics"], "after_exact_dedup": ex["rows"],
+                  **cur["metrics"], last: cur["rows"]}
     return {"curated": curated, "accounting": accounting,
             "clusters": result["clusters"]}

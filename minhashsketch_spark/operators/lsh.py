@@ -38,7 +38,7 @@ Scale design (the shuffle hotspot of the whole pipeline — north_rule:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -56,9 +56,14 @@ def bucket_stats(bands: DataFrame) -> DataFrame:
     return bands.groupBy("band_key").agg(F.count("*").alias("bucket_size"))
 
 
-def salt_hot_buckets(bands: DataFrame, cap: int) -> DataFrame:
+def salt_hot_buckets(bands: DataFrame, cap: int,
+                     observation: Observation | None = None) -> DataFrame:
     """Attach (bucket_size, n_salt, salt); drop singleton buckets early
     (they generate no pairs — the common case by far).
+
+    ``observation`` observes the size aggregate before singletons drop:
+    buckets, max_bucket, buckets_over_cap, band_rows (sum of sizes) and
+    band_pairs (sum of s(s-1)/2 in double: a long could overflow under ANSI).
 
     Sizes via hash-agg + join, NOT count-over-window: the window form
     buffers every row of a band in one task's window frame, so a single
@@ -74,11 +79,19 @@ def salt_hot_buckets(bands: DataFrame, cap: int) -> DataFrame:
     from ..partitioning import eager_if_python
 
     bands = eager_if_python(bands)
-    sizes = (bands.groupBy("band_key")
-             .agg(F.count("*").alias("bucket_size"))
-             .filter(F.col("bucket_size") >= 2))
+    sizes = bucket_stats(bands)
+    if observation is not None:
+        s = F.col("bucket_size")
+        sizes = sizes.observe(
+            observation,
+            F.count(F.lit(1)).alias("buckets"),
+            F.max(s).alias("max_bucket"),
+            F.sum((s > cap).cast("long")).alias("buckets_over_cap"),
+            F.sum(s).alias("band_rows"),
+            F.sum(s.cast("double") * (s - 1) / 2).alias("band_pairs"))
+    # the inner join drops singletons
     return (
-        bands.join(sizes, "band_key")  # inner join drops singletons
+        bands.join(sizes.filter(F.col("bucket_size") >= 2), "band_key")
         .withColumn("n_salt",
                     F.ceil(F.col("bucket_size") / F.lit(cap)).cast("int"))
         .withColumn("salt",
@@ -87,12 +100,14 @@ def salt_hot_buckets(bands: DataFrame, cap: int) -> DataFrame:
     )
 
 
-def candidate_pairs(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """signatures -> distinct (url_a, url_b) candidate pairs, url_a < url_b."""
+def candidate_pairs(signatures: DataFrame, cfg: PipelineConfig,
+                    observation: Observation | None = None) -> DataFrame:
+    """signatures -> distinct (url_a, url_b) candidate pairs, url_a < url_b.
+    ``observation``: observes the bucket metrics (see salt_hot_buckets)."""
     from ..partitioning import eager_if_python
 
     bands = explode_bands(signatures)
-    salted = salt_hot_buckets(bands, cfg.bucket_cap)
+    salted = salt_hot_buckets(bands, cfg.bucket_cap, observation)
     # materialize before the self-join ONLY when a Python UDF computes the
     # salted frame (ad-hoc callers passing raw compute_signatures output):
     # re-planning it would run the signature UDF once per consumer. For

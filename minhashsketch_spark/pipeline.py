@@ -16,12 +16,12 @@ import shutil
 import tempfile
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
 from .operators.connected_components import connected_components
-from .operators.lsh import bucket_stats, candidate_pairs, explode_bands
+from .operators.lsh import candidate_pairs
 from .operators.signatures import compute_signatures
 from .operators.verify import BROADCAST_PAIR_LIMIT, minhash_estimate
 from .sources.io import StageStore
@@ -83,16 +83,19 @@ def input_fingerprint(docs: DataFrame) -> str:
 def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                  checkpoint_root: str | None = None,
                  url_col: str = "url", text_col: str = "text",
-                 stage_key: str | None = None) -> dict[str, DataFrame]:
-    """Returns {"signatures", "candidates", "verified", "clusters"} DataFrames.
+                 stage_key: str | None = None) -> dict:
+    """Returns {"signatures", "candidates", "verified", "clusters"}
+    DataFrames, plus "timings": {stage: seconds} for the stages this call
+    wrote (a resumed stage has no entry).
 
     With ``checkpoint_root`` set, each stage is persisted and a re-run skips
     completed stages (kill/resume-safe: manifests are written atomically
-    after the data). Without it, stages checkpoint into a session-scoped
-    temp dir: downstream stages consume every UDF output from parquet, never
-    from a Spark cache — large array columns in an InMemoryRelation
-    measurably anti-scale under many-threaded readers, and the checkpoint
-    also cuts the signature UDF out of the self-join lineage.
+    after the data). Without it, stages checkpoint into a fresh temp root
+    per call, removed at interpreter exit: downstream stages consume every
+    UDF output from parquet, never from a Spark cache — large array
+    columns in an InMemoryRelation measurably anti-scale under
+    many-threaded readers, and the checkpoint also cuts the signature UDF
+    out of the self-join lineage.
 
     ``stage_key`` keys the checkpoints; it defaults to the config hash, but
     a persistent ``checkpoint_root`` shared across inputs must fold an input
@@ -113,30 +116,20 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                    str(cfg.arrow_batch_rows))
 
-    def stage(name: str, build, metrics=None, extra_aggs=None) -> DataFrame:
+    def stage(name: str, build, extra_aggs=None, observed=()) -> DataFrame:
         if store.exists(name):
             return store.read(name)
         t0 = time.time()
-        df = store.write(name, build(),
-                         metrics={} if metrics is None else metrics(),
-                         extra_aggs=extra_aggs)
+        df = store.write(name, build(), extra_aggs=extra_aggs, observed=observed)
         timings[name] = time.time() - t0
         return df
 
     signatures = stage("signatures", lambda: compute_signatures(docs, cfg, url_col, text_col))
-
-    def cand_metrics():
-        stats = bucket_stats(explode_bands(signatures))
-        row = stats.agg(
-            F.count("*").alias("buckets"),
-            F.max("bucket_size").alias("max_bucket"),
-            F.sum((F.col("bucket_size") > cfg.bucket_cap).cast("long")).alias("buckets_over_cap"),
-        ).collect()[0]
-        return {"buckets": row["buckets"], "max_bucket": row["max_bucket"],
-                "buckets_over_cap": row["buckets_over_cap"]}
-
-    candidates = stage("candidates", lambda: candidate_pairs(signatures, cfg),
-                       metrics=cand_metrics)
+    # bucket metrics, observed on the sizes aggregate the write computes
+    buckets = Observation()
+    candidates = stage("candidates",
+                       lambda: candidate_pairs(signatures, cfg, buckets),
+                       observed=(buckets,))
     # the candidates manifest exists here (resumed or just written): its
     # row count sizes the broadcast without a count() job
     small = store.manifest("candidates")["rows"] <= BROADCAST_PAIR_LIMIT

@@ -121,6 +121,10 @@ def register_bucketed(spark: SparkSession, table: str, path: str,
         f"LOCATION '{path}'")
 
 
+_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_AQE_EMPTY_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+
+
 class StageStore:
     """Checkpointed stage outputs keyed by (config_hash, stage).
 
@@ -148,22 +152,38 @@ class StageStore:
         return os.path.exists(self._manifest_path(stage))
 
     def read(self, stage: str) -> DataFrame:
-        return read_table(self.spark, self._path(stage))
+        """Read with the manifest's schema (no inference job), if it has one."""
+        schema = self.manifest(stage).get("schema")
+        return read_table(self.spark, self._path(stage),
+                          None if schema is None else StructType.fromJson(json.loads(schema)))
 
     def write(self, stage: str, df: DataFrame, metrics: dict | None = None,
-              extra_aggs: dict | None = None) -> DataFrame:
+              extra_aggs: dict | None = None,
+              observed: tuple[Observation, ...] = ()) -> DataFrame:
         """Write ``df`` as ``stage`` and its manifest, with no Spark job
         beyond the write's own. The row count and the ``extra_aggs``
         totals (named aggregate Columns, e.g. a dup-pair count that
         downstream stages read from the manifest instead of paying an
         extra count()) are observed on the write; the per-partition
-        lineage is the footer row count of each part file written."""
+        lineage is the footer row count of each part file written.
+
+        ``observed``: Observations attached upstream inside ``df``; their
+        values join the manifest metrics. AQE's empty-relation rule is off
+        while they run: it drops a subplan under an empty stage, and an
+        observation in it then reads empty."""
         path = self._path(stage)
         extra_aggs = extra_aggs or {}
         obs = Observation()
-        write_table(df.observe(obs, F.count(F.lit(1)).alias("rows"),
-                               *[e.alias(k) for k, e in extra_aggs.items()]),
-                    path)
+        conf = self.spark.conf
+        excluded = conf.get(_EXCLUDED_RULES, "")
+        if observed:
+            conf.set(_EXCLUDED_RULES, ",".join(filter(None, [excluded, _AQE_EMPTY_RULE])))
+        try:
+            write_table(df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                                   *[e.alias(k) for k, e in extra_aggs.items()]),
+                        path)
+        finally:
+            conf.set(_EXCLUDED_RULES, excluded)
         totals = obs.get
         out = read_table(self.spark, path, schema=df.schema)
         # per-partition lineage (north_rule: "per-partition lineage +
@@ -182,7 +202,9 @@ class StageStore:
                 "mean": round(sum(ppart) / len(ppart), 1) if ppart else 0,
             },
             "metrics": {**(metrics or {}),
+                        **{k: v for o in observed for k, v in o.get.items()},
                         **{k: int(totals[k] or 0) for k in extra_aggs}},
+            "schema": df.schema.json(),
         }
         tmp = self._manifest_path(stage) + ".tmp"
         with open(tmp, "w") as f:

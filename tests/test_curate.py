@@ -49,12 +49,10 @@ def test_curate_keeper_best_keeps_highest_quality(spark, tmp_path):
 
     kept_min = {r["url"] for r in curate(
         spark, docs, cfg, min_quality=0.0, langs=("unknown",),
-        checkpoint_root=str(tmp_path / "c1"), with_accounting=False,
-        keeper="min")["curated"].collect()}
+        checkpoint_root=str(tmp_path / "c1"), keeper="min")["curated"].collect()}
     kept_best = {r["url"] for r in curate(
         spark, docs, cfg, min_quality=0.0, langs=("unknown",),
-        checkpoint_root=str(tmp_path / "c2"), with_accounting=False,
-        keeper="best")["curated"].collect()}
+        checkpoint_root=str(tmp_path / "c2"), keeper="best")["curated"].collect()}
     assert kept_min == {"u-a", "u-z"}   # lexicographic min
     assert kept_best == {"u-b", "u-z"}  # higher quality (no digit penalty)
 
@@ -66,7 +64,7 @@ def test_curate_empty_checkpoint_root_uses_temp_root(spark, tmp_path,
     directory."""
     monkeypatch.chdir(tmp_path)
     docs_df, _ = corpus_dataframe(spark, n_docs=40, seed=21)
-    curate(spark, docs_df, CFG, checkpoint_root="", with_accounting=False)
+    curate(spark, docs_df, CFG, checkpoint_root="")
     assert list(tmp_path.iterdir()) == []
 
 
@@ -116,3 +114,104 @@ def test_curate_with_robots_filters_first(spark):
     assert acc["after_robots"] < acc["input"]
     kept = [r["url"] for r in out["curated"].select("url").collect()]
     assert kept and all("site1.example" not in u for u in kept)
+
+
+def test_curate_rejects_bad_keeper_before_any_job(spark):
+    """An invalid keeper raises before curate submits a single Spark job."""
+    import pytest
+
+    from conftest import jobs_in_group
+
+    docs_df, _ = corpus_dataframe(spark, n_docs=20, seed=21)
+    with pytest.raises(ValueError, match="keeper"):
+        jobs_in_group(spark, "bad_keeper",
+                      lambda: curate(spark, docs_df, CFG, keeper="bogus"))
+    assert not spark.sparkContext.statusTracker().getJobIdsForGroup("bad_keeper")
+
+
+def test_curate_accounting_equals_direct_counts(spark, tmp_path):
+    """With robots and benchmark given, every accounting value (observed on
+    the stage writes) equals a direct count of that step, and the steps
+    are listed in pipeline order."""
+    from minhashsketch_spark.operators.decontam import decontaminate
+    from minhashsketch_spark.operators.dedup_corpus import (
+        exact_dedup_corpus,
+        near_dedup_corpus,
+    )
+    from minhashsketch_spark.operators.robots import filter_robots_disallowed
+    from minhashsketch_spark.operators.text import detected_lang_expr, quality_score_expr
+
+    docs_df, _ = corpus_dataframe(spark, n_docs=150, seed=21)
+    robots = spark.createDataFrame(
+        [("site1.example", "User-agent: *\nDisallow: /page")],
+        "domain string, robots_txt string")
+    victim = sorted(r["text"] for r in docs_df.select("text").collect())[0]
+    bench = spark.createDataFrame([(victim,)], "text string")
+    out = curate(spark, docs_df, CFG, min_quality=10.0, langs=("en", "unknown"),
+                 checkpoint_root=str(tmp_path / "ckpt"), robots=robots,
+                 benchmark=bench)
+    acc = out["accounting"]
+    assert list(acc) == ["input", "after_robots", "after_exact_dedup",
+                         "after_near_dedup", "after_quality_lang",
+                         "after_decontam"]
+
+    allowed = filter_robots_disallowed(docs_df, robots, url_col="url")
+    exact = exact_dedup_corpus(allowed, id_col="url", text_col="text")
+    near = near_dedup_corpus(exact, out["clusters"], url_col="url")
+    filtered = near.filter((quality_score_expr("text") >= 10.0)
+                           & detected_lang_expr("text").isin("en", "unknown"))
+    direct = [docs_df, allowed, exact, near, filtered,
+              decontaminate(filtered, bench, id_col="url")]
+    assert list(acc.values()) == [df.count() for df in direct]
+    assert acc["after_decontam"] < acc["after_quality_lang"]
+    assert out["curated"].count() == acc["after_decontam"]
+
+
+def test_curate_accounting_survives_empty_stages(spark, tmp_path):
+    """A robots policy that disallows every page empties every stage after
+    the input; the step counts observed upstream of the empty stages must
+    still reach the accounting."""
+    docs_df, _ = corpus_dataframe(spark, n_docs=60, seed=21)
+    robots = spark.createDataFrame(
+        [(f"site{i}.example", "User-agent: *\nDisallow: /") for i in range(60)],
+        "domain string, robots_txt string")
+    out = curate(spark, docs_df, CFG, checkpoint_root=str(tmp_path / "ckpt"),
+                 robots=robots)
+    assert out["accounting"] == {"input": 60, "after_robots": 0,
+                                 "after_exact_dedup": 0, "after_near_dedup": 0,
+                                 "after_quality_lang": 0}
+
+
+def test_curate_resume_runs_no_job(spark, tmp_path):
+    """A second curate on the same checkpoint root reads every stage back
+    (manifest schemas, no inference job) and submits no Spark job; with
+    only min_quality changed it re-runs just the curated stage and returns
+    the new filter's rows."""
+    import os
+
+    from conftest import jobs_in_group
+
+    docs_df, _ = corpus_dataframe(spark, n_docs=80, seed=21)
+    root = str(tmp_path / "ckpt")
+    kw = dict(langs=("en", "unknown"), checkpoint_root=root)
+    # every doc of this corpus scores 100: nothing passes 101, all pass 10
+    first = curate(spark, docs_df, CFG, min_quality=101.0, **kw)
+    base = os.path.join(root, os.listdir(root)[0])
+    manifests = {f: os.path.getmtime(os.path.join(base, f))
+                 for f in os.listdir(base) if f.endswith(".manifest.json")}
+
+    again, jobs = jobs_in_group(spark, "curate_resume", lambda: curate(
+        spark, docs_df, CFG, min_quality=101.0, **kw))
+    assert jobs == []
+    assert again["accounting"] == first["accounting"]
+
+    looser = curate(spark, docs_df, CFG, min_quality=10.0, **kw)
+    added = {f for f in os.listdir(base)
+             if f.endswith(".manifest.json")} - set(manifests)
+    assert len(added) == 1 and added.pop().startswith("curated-")
+    assert all(os.path.getmtime(os.path.join(base, f)) == t
+               for f, t in manifests.items())
+    assert first["accounting"]["after_quality_lang"] == 0
+    acc = looser["accounting"]
+    assert acc["after_quality_lang"] == acc["after_near_dedup"] \
+        == first["accounting"]["after_near_dedup"] == looser["curated"].count() > 0

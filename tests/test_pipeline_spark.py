@@ -16,7 +16,12 @@ from minhashsketch_spark.core.shingles import (
     minhash_matrix,
 )
 from minhashsketch_spark.operators.connected_components import connected_components
-from minhashsketch_spark.operators.lsh import candidate_pairs, explode_bands, salt_hot_buckets
+from minhashsketch_spark.operators.lsh import (
+    bucket_stats,
+    candidate_pairs,
+    explode_bands,
+    salt_hot_buckets,
+)
 from minhashsketch_spark.operators.signatures import compute_signatures
 from minhashsketch_spark.operators.verify import verified_pairs
 from minhashsketch_spark.pipeline import clusters_to_pairs, dup_pair_recall, run_pipeline
@@ -441,6 +446,88 @@ def test_stage_write_is_one_job(spark, tmp_path):
         pq.read_metadata(os.path.join(path, f)).num_rows for f in parts]
     assert m["partitions"] == len(parts)
     assert out.schema == spark.read.parquet(path).schema
+
+
+def test_stage_read_uses_the_manifest_schema(spark, tmp_path):
+    """A resumed stage is read with the schema its manifest recorded, so
+    the read submits no inference job; a manifest without a schema still
+    reads, by inference."""
+    import json
+
+    from minhashsketch_spark.sources.io import StageStore
+
+    store = StageStore(spark, str(tmp_path / "ckpt"), "k")
+    store.write("s", spark.range(0, 100, 1, 2).selectExpr("id", "CAST(id AS STRING) AS s"))
+    out, jobs = jobs_in_group(spark, "stage_read", lambda: store.read("s"))
+    assert jobs == []
+    path = store._manifest_path("s")
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    inferred = store.read("s")
+    assert inferred.schema == out.schema
+    assert sorted(inferred.collect()) == sorted(out.collect())
+
+
+@pytest.fixture(scope="module")
+def bench_inputs(tmp_path_factory):
+    """The benchmark workloads' seed-1 inputs (perfbench/inputs.py)."""
+    from perfbench import inputs
+
+    cache = str(tmp_path_factory.mktemp("bench_inputs"))
+    return {"shortdoc": inputs.shortdoc(cache, 1, 2000),
+            "longdoc": inputs.longdoc(cache, 1, 600)}
+
+
+def _direct_bucket_metrics(signatures, cap):
+    s = F.col("bucket_size")
+    return bucket_stats(explode_bands(signatures)).agg(
+        F.count("*").alias("buckets"),
+        F.max(s).alias("max_bucket"),
+        F.sum((s > cap).cast("long")).alias("buckets_over_cap"),
+        F.sum(s).alias("band_rows"),
+        F.sum(s * (s - 1) / 2).alias("band_pairs")).first().asDict()
+
+
+@pytest.mark.parametrize("cap", [512, 4])
+@pytest.mark.parametrize("workload", ["shortdoc", "longdoc"])
+def test_candidates_manifest_carries_bucket_metrics(spark, tmp_path, bench_inputs,
+                                                    workload, cap):
+    """The bucket metrics observed on the candidates write equal a direct
+    aggregate over bucket_stats. At cap 4 salting and chain reps engage,
+    so the salted frame (and the observation in it) has three consumers."""
+    from minhashsketch_spark.sources.io import StageStore
+
+    cfg = PipelineConfig.from_threshold(k=9, m=1, t=128, threshold=0.7,
+                                        seed=42, bucket_cap=cap)
+    docs = spark.read.parquet(f"{bench_inputs[workload]}/docs.parquet")
+    root = str(tmp_path / "ckpt")
+    r = run_pipeline(spark, docs, cfg, checkpoint_root=root)
+    m = StageStore(spark, root, cfg.config_hash()).manifest("candidates")
+    direct = _direct_bucket_metrics(r["signatures"], cap)
+    assert m["metrics"] == direct
+    assert direct["band_rows"] == docs.count() * cfg.bands
+    assert m["rows"] == r["candidates"].count()
+    assert (direct["buckets_over_cap"] > 0) == (cap == 4)
+
+
+def test_candidates_metrics_without_any_collision(spark, tmp_path):
+    """No two docs share a band key: every candidates branch is empty, and
+    the bucket metrics must still reach the manifest."""
+    from minhashsketch_spark.sources.io import StageStore
+
+    docs = spark.createDataFrame(
+        [(f"u{i}", " ".join(f"w{i}x{j}" for j in range(40))) for i in range(5)],
+        "url string, text string")
+    root = str(tmp_path / "ckpt")
+    r = run_pipeline(spark, docs, CFG, checkpoint_root=root)
+    m = StageStore(spark, root, CFG.config_hash()).manifest("candidates")
+    assert m["rows"] == 0
+    assert m["metrics"] == _direct_bucket_metrics(r["signatures"], CFG.bucket_cap) == {
+        "buckets": 5 * CFG.bands, "max_bucket": 1, "buckets_over_cap": 0,
+        "band_rows": 5 * CFG.bands, "band_pairs": 0.0}
 
 
 def test_containment_asymmetric_overlap(spark):
