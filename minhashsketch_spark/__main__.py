@@ -71,12 +71,12 @@ def _make_config(a):
     from .config import PipelineConfig
 
     if a.bands is None and a.rows is None:
-        return PipelineConfig.from_threshold(k=a.k, m=a.m, t=a.t,
-                                             threshold=a.threshold, seed=a.seed)
+        return PipelineConfig.from_threshold(k=a.k, t=a.t, threshold=a.threshold,
+                                             seed=a.seed)
     if a.bands is None or a.rows is None:
         raise ValueError("--bands and --rows must be given together "
                          "(or neither, to let the S-curve plan the layout)")
-    return PipelineConfig(k=a.k, m=a.m, t=a.t, bands=a.bands, rows=a.rows,
+    return PipelineConfig(k=a.k, t=a.t, bands=a.bands, rows=a.rows,
                           threshold=a.threshold, seed=a.seed)
 
 
@@ -86,13 +86,11 @@ def _pipeline(argv: list[str]) -> None:
     p.add_argument("--output", required=True)
     p.add_argument("--checkpoint", default=None)
     p.add_argument("--k", type=int, default=9)
-    p.add_argument("--m", type=int, default=1)
     p.add_argument("--t", type=int, default=128)
     p.add_argument("--bands", type=int, default=None)
     p.add_argument("--rows", type=int, default=None)
     p.add_argument("--threshold", type=float, default=0.7)
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--cpus", default="*")
     a = p.parse_args(argv)
 
     from pyspark.sql import Observation, SparkSession
@@ -141,7 +139,6 @@ def _curate(argv: list[str]) -> None:
                    help="optional (domain, robots_txt) table; when given, "
                         "a robots.txt compliance filter runs FIRST")
     p.add_argument("--k", type=int, default=9)
-    p.add_argument("--m", type=int, default=1)
     p.add_argument("--t", type=int, default=128)
     p.add_argument("--bands", type=int, default=None)
     p.add_argument("--rows", type=int, default=None)

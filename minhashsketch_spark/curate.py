@@ -82,6 +82,8 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     """
     if keeper not in ("min", "best"):
         raise ValueError(f"keeper must be 'min' or 'best', got {keeper!r}")
+    if cfg.m != 1:
+        raise ValueError(f"curate needs m=1 signatures, got m={cfg.m}")
     checkpoint_root = checkpoint_root or _auto_checkpoint_root("mhs_curate_")
     stage_key = f"{cfg.config_hash()}-{input_fingerprint(docs)}"
     if robots is not None:

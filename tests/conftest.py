@@ -6,13 +6,13 @@ import pytest
 os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
 os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
 
+from __spark_entry__ import _CLIPS  # noqa: E402  (after the worker-python env)
+
 # the reference's own clip FASTAs, read by the parity goldens; tests that
 # need them skip when they are absent
-REFERENCE_CLIPS = "/root/reference/testing_files"
-CLIP_PATHS = [f"{REFERENCE_CLIPS}/sequence_clip{i}.fasta" for i in (1, 2, 3)]
 requires_clips = pytest.mark.skipif(
-    not all(os.path.exists(p) for p in CLIP_PATHS),
-    reason=f"reference clip FASTAs absent from {REFERENCE_CLIPS}")
+    not all(os.path.exists(p) for p in _CLIPS),
+    reason=f"reference clip FASTAs absent from {os.path.dirname(_CLIPS[0])}")
 
 
 def jobs_in_group(spark, group, action):

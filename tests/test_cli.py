@@ -3,7 +3,8 @@
 import subprocess
 import sys
 
-from conftest import CLIP_PATHS, requires_clips
+from __spark_entry__ import _CLIPS
+from conftest import requires_clips
 
 
 def _run(*args):
@@ -13,7 +14,7 @@ def _run(*args):
 
 @requires_clips
 def test_dna_cli_reference_output():
-    r = _run("dna", CLIP_PATHS[0], CLIP_PATHS[1],
+    r = _run("dna", _CLIPS[0], _CLIPS[1],
              "all", "-e", "--k=5", "--m=10", "--t=10", "--seed=123")
     assert r.returncode == 0
     # golden similarity from the reference's own compiled code
@@ -24,7 +25,7 @@ def test_dna_cli_reference_output():
 
 @requires_clips
 def test_dna_cli_k_too_large():
-    r = _run("dna", CLIP_PATHS[0], CLIP_PATHS[1], "--k=5000", "--t=1")
+    r = _run("dna", _CLIPS[0], _CLIPS[1], "--k=5000", "--t=1")
     assert r.returncode == 1
     assert "k cannot be greater" in r.stdout  # src/main.cu:222 wording
 

@@ -129,6 +129,23 @@ def test_curate_rejects_bad_keeper_before_any_job(spark):
     assert not spark.sparkContext.statusTracker().getJobIdsForGroup("bad_keeper")
 
 
+def test_curate_rejects_general_m_before_any_job(spark, tmp_path):
+    """A config with m != 1 raises before curate submits a Spark job or
+    writes a stage."""
+    import pytest
+
+    from conftest import jobs_in_group
+
+    docs_df, _ = corpus_dataframe(spark, n_docs=20, seed=21)
+    cfg = PipelineConfig(k=9, m=2, t=128, bands=32, rows=4, seed=7, threshold=0.7)
+    root = tmp_path / "ckpt"
+    with pytest.raises(ValueError, match="m=2"):
+        jobs_in_group(spark, "bad_m",
+                      lambda: curate(spark, docs_df, cfg, checkpoint_root=str(root)))
+    assert not spark.sparkContext.statusTracker().getJobIdsForGroup("bad_m")
+    assert not list(root.rglob("*.manifest.json"))
+
+
 def test_curate_accounting_equals_direct_counts(spark, tmp_path):
     """With robots and benchmark given, every accounting value (observed on
     the stage writes) equals a direct count of that step, and the steps

@@ -9,7 +9,8 @@ import pytest
 from minhashsketch_spark.core import compute_sim, fasta_to_string, gen_sig, generate_hashes_b
 from minhashsketch_spark.operators.dna import dna_signatures, dna_similarity, fasta_documents
 
-from conftest import CLIP_PATHS, requires_clips
+from __spark_entry__ import _CLIPS
+from conftest import requires_clips
 
 
 def _write_synthetic(tmp_path):
@@ -36,7 +37,7 @@ def _write_synthetic(tmp_path):
 @pytest.fixture(params=[pytest.param("reference", marks=requires_clips), "synthetic"])
 def fasta_paths(request, tmp_path):
     if request.param == "reference":
-        return CLIP_PATHS
+        return _CLIPS
     return _write_synthetic(tmp_path)
 
 

@@ -2,17 +2,14 @@
 compare against oracle_sql() via DuckDB exactly like the driver does
 (row count + schema + order-insensitive values, columns sorted by name)."""
 
-import math
-
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
 from conftest import requires_clips
+from measure import CLIP_QUERIES, TABLES, _norm
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")
@@ -23,27 +20,8 @@ def ddb():
     return con
 
 
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float):
-                v = round(v, 9)
-                if math.isnan(v):
-                    v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=repr)
-    return out
-
-
 ORACLES = sorted(entry_mod.oracle_sql().keys())
 ALL = sorted(entry_mod.queries().keys())
-# queries over the reference clip FASTAs
-CLIP_QUERIES = {"dna_similarity", "dna_sketches"}
 
 
 @pytest.mark.parametrize("name", [

@@ -24,14 +24,15 @@ from minhashsketch_spark.core.rng import INT_MAX, MERSENNE_P, uniform_int
 from minhashsketch_spark.core import spooky
 from minhashsketch_spark.core.sketch import compute_sim_row, compute_sim_two_pointer
 
-from conftest import CLIP_PATHS, requires_clips
+from __spark_entry__ import _CLIPS
+from conftest import requires_clips
 
 HERE = os.path.dirname(__file__)
 GOLD = json.load(open(os.path.join(HERE, "goldens_refcompiled.json")))
 
 
 def _clip(n):
-    _, seq = fasta_to_string(CLIP_PATHS[n - 1])
+    _, seq = fasta_to_string(_CLIPS[n - 1])
     return seq
 
 
