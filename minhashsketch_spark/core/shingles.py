@@ -15,6 +15,7 @@ batches inside ``mapInPandas`` — no per-row Python.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import numpy as np
@@ -179,11 +180,16 @@ def band_keys_batch(sigs: np.ndarray, bands: int, rows: int) -> np.ndarray:
     return acc.view(np.int64)
 
 
+@functools.cache
 def get_family(t: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """(a, b) parameter arrays as np.uint64 — broadcast-friendly tiny table."""
+    """(a, b) parameter arrays as np.uint64 — broadcast-friendly tiny table.
+
+    Memoized (``generate_hashes_ab`` is pure Python, ~0.1 s at t=128) and
+    read-only, so no caller can corrupt the shared copy."""
     ab = generate_hashes_ab(t, seed)
     a = np.array([x[0] for x in ab], dtype=np.uint64)
     b = np.array([x[1] for x in ab], dtype=np.uint64)
+    a.flags.writeable = b.flags.writeable = False
     return a, b
 
 

@@ -24,6 +24,7 @@ url of the component — deterministic, resume-stable (SURVEY.md H7).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -88,8 +89,12 @@ def _driver_union_find(pairs: DataFrame) -> DataFrame:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    rows = [(u, find(u)) for u in parent]
-    return pairs.sparkSession.createDataFrame(rows, schema="url string, cluster_id string")
+    urls = list(parent)
+    # an Arrow table plans a JVM LocalRelation; a Python list would plan a
+    # LogicalRDD whose rows Python workers unpickle again on every read
+    table = pa.table({"url": pa.array(urls, pa.string()),
+                      "cluster_id": pa.array([find(u) for u in urls], pa.string())})
+    return pairs.sparkSession.createDataFrame(table, schema="url string, cluster_id string")
 
 
 def connected_components(pairs: DataFrame, max_iterations: int = 20,

@@ -104,21 +104,17 @@ def candidate_pairs(signatures: DataFrame, cfg: PipelineConfig,
                     observation: Observation | None = None) -> DataFrame:
     """signatures -> distinct (url_a, url_b) candidate pairs, url_a < url_b.
     ``observation``: observes the bucket metrics (see salt_hot_buckets)."""
-    from ..partitioning import eager_if_python
-
     bands = explode_bands(signatures)
+    # salt_hot_buckets already materialized ``bands`` if a Python UDF
+    # computes it (ad-hoc callers passing raw compute_signatures output),
+    # so no UDF is left under ``salted``. For checkpointed/parquet-backed
+    # signatures (run_pipeline, the r6 driver queries) the three consumers
+    # below re-plan a cheap explode + sizes join whose identical exchanges
+    # Spark de-duplicates (ReusedExchange), and nothing pins the docs x
+    # bands frame to executor storage — the r5 unconditional
+    # localCheckpoint held that PB-scale-at-10^12-docs frame in memory
+    # (VERDICT r5 watch item #3).
     salted = salt_hot_buckets(bands, cfg.bucket_cap, observation)
-    # materialize before the self-join ONLY when a Python UDF computes the
-    # salted frame (ad-hoc callers passing raw compute_signatures output):
-    # re-planning it would run the signature UDF once per consumer. For
-    # checkpointed/parquet-backed signatures (run_pipeline, the r6 driver
-    # queries) the three consumers re-plan a cheap explode + sizes join
-    # whose identical exchanges Spark de-duplicates (ReusedExchange), and
-    # nothing pins the docs x bands frame to executor storage — the
-    # r5 unconditional localCheckpoint held that PB-scale-at-10^12-docs
-    # frame in memory (VERDICT r5 watch item #3). EAGER when needed, never
-    # a lazy persist: racing consumers recompute the same partitions.
-    salted = eager_if_python(salted)
 
     left = salted.select("band_key", "salt", F.col("url").alias("url_a"))
     right = salted.select("band_key", "salt", F.col("url").alias("url_b"))

@@ -83,3 +83,22 @@ def test_roundtrip_identical_with_and_without_iceberg(spark, tmp_path,
     a = sorted(tuple(r) for r in IO.read_table(spark, p1).collect())
     b = sorted(tuple(r) for r in IO.read_table(spark, p2).collect())
     assert a == b
+
+
+def test_iceberg_probed_once_per_context(spark, tmp_path, monkeypatch):
+    """Each probe is a JVM Class.forName whose ClassNotFoundException is
+    converted on the Python side; the classpath cannot change under a
+    running context, so repeated reads and writes probe once."""
+    import weakref
+
+    probes = []
+    real = IO._iceberg_on_classpath
+    monkeypatch.setattr(IO, "_ICEBERG", weakref.WeakKeyDictionary())
+    monkeypatch.setattr(IO, "_iceberg_on_classpath",
+                        lambda s: probes.append(s) or real(s))
+    for i in range(3):
+        p = str(tmp_path / f"t{i}")
+        IO.write_table(spark.range(0, 5), p)
+        assert IO.read_table(spark, p).count() == 5
+    assert len(probes) == 1
+    assert IO.iceberg_available(spark) is real(spark)

@@ -94,6 +94,20 @@ def test_connected_components_vs_union_find(spark, graph, threshold):
         assert ids.pop() == min(members)  # cluster_id = lexicographic min url
 
 
+@pytest.mark.parametrize("graph", [[("a", "b"), ("b", "c"), ("x", "y")], []])
+def test_small_graph_clusters_are_a_local_relation(spark, graph):
+    """The driver union-find hands its clusters to the JVM as a
+    LocalRelation: a Python-list frame plans a LogicalRDD, whose rows
+    Python workers unpickle again on every read. Empty edge sets too."""
+    pairs = spark.createDataFrame(graph, schema="url_a string, url_b string")
+    small = connected_components(pairs)
+    plan = small._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert small.schema.simpleString() == "struct<url:string,cluster_id:string>"
+    distributed = connected_components(pairs, small_graph_threshold=0)
+    assert sorted(small.collect()) == sorted(distributed.collect())
+
+
 def test_cc_randomized_vs_union_find(spark):
     rng = np.random.RandomState(5)
     edges = [(f"n{rng.randint(0, 120):03d}", f"n{rng.randint(0, 120):03d}") for _ in range(150)]

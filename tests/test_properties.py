@@ -109,24 +109,44 @@ def test_minhash_doc_order_invariance(texts):
         assert np.array_equal(s1, s2)
 
 
-def test_native_minhash_equals_numpy():
-    import os
+def test_native_minhash_equals_numpy(tmp_path, monkeypatch):
+    """The NumPy fallback, the clone the loaded library's resolver picked
+    and the portable loop (``MHS_CLONES`` emptied: what a host without
+    ifunc builds) agree bit for bit, on sets on both sides of 2**63."""
+    import shutil
 
     from minhashsketch_spark.core import _native
+    from minhashsketch_spark.core.rng import MERSENNE_P
 
-    rng = np.random.RandomState(9)
-    a_par, b_par = get_family(64, 21)
-    for n in (0, 1, 7, 1000):
-        xs = np.unique(rng.randint(0, 2**63, size=max(n, 1)).astype(np.uint64))[:n]
-        os.environ["MHS_DISABLE_NATIVE"] = "1"
-        _native._tried = False
-        _native._lib = None
+    if not any(shutil.which(cc) for cc in ("cc", "gcc", "clang")):
+        pytest.skip("no C compiler on PATH")
+    src, so = str(tmp_path / "minhash.c"), str(tmp_path / "libportable.so")
+    with open(src, "w") as f:
+        f.write(_native._C_SRC)
+    assert _native.compile_c(src, so, "-DMHS_CLONES=")
+    portable = _native.open_lib(so)
+    rng = np.random.default_rng(23)
+    a_par, b_par = get_family(128, 5)
+    edges = np.array([0, 1, 2**63 - 1, 2**63, 2**64 - 1], dtype=np.uint64)
+    for n in (0, 1, 7, 1000, 5384):
+        xs = np.unique(np.concatenate(
+            [edges, rng.integers(0, 2**64 - 1, size=2 * n, dtype=np.uint64)]))
+        xs = rng.permutation(xs)[:n]
+        monkeypatch.setenv("MHS_DISABLE_NATIVE", "1")
+        monkeypatch.setattr(_native, "_lib", None)
+        monkeypatch.setattr(_native, "_tried", False)
         ref = minhash_matrix(xs, a_par, b_par)
-        del os.environ["MHS_DISABLE_NATIVE"]
-        _native._tried = False
-        _native._lib = None
-        got = minhash_matrix(xs, a_par, b_par)
-        assert np.array_equal(ref, got)
+        monkeypatch.delenv("MHS_DISABLE_NATIVE")
+        monkeypatch.setattr(_native, "_tried", False)
+        assert _native._load() is not None
+        if n >= 7:
+            assert (xs >= 2**63).any() and (xs < 2**63).any()
+        if n == 1:  # one value per function: the minima straddle 2**63 too
+            assert (ref >= 2**63).any() and (ref < 2**63).any()
+        for got in (_native.native_minhash(xs, a_par, b_par, MERSENNE_P),
+                    _native.native_minhash(xs, a_par, b_par, MERSENNE_P, lib=portable)):
+            assert got.dtype == np.uint64
+            assert np.array_equal(got, ref), n
 
 
 def test_native_intersect_count_equals_numpy(monkeypatch):
@@ -174,6 +194,16 @@ def test_native_intersect_count_equals_numpy(monkeypatch):
     # the int64 view of the same sets is rejected, not silently miscounted
     with pytest.raises(TypeError):
         intersect_count(va.view(np.int64), oa, vb.view(np.int64), ob)
+
+
+def test_get_family_is_memoized_and_read_only():
+    a1, b1 = get_family(128, 42)
+    a2, b2 = get_family(128, 42)
+    assert a1 is a2 and b1 is b2
+    for arr in (a1, b1):
+        with pytest.raises(ValueError):
+            arr[0] = 1
+    assert get_family(128, 43)[0][0] != a1[0]
 
 
 def test_gram_hashes_equals_shingle_hashes():
