@@ -93,19 +93,38 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _next_job(spark) -> int:
+    """The id the next Spark job gets: one past the status store's newest."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # every job end recorded
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() + 1 if jobs.size() else 0
+
+
+def _jobs_since(spark, lo: int) -> dict:
+    """Jobs ``lo``.. by id, whatever their group (stream-thread jobs carry none), and
+    the seconds in which at least one of them ran."""
+    store, busy, until = spark.sparkContext._jsc.sc().statusStore(), 0, 0
+    ids = range(lo, _next_job(spark))
+    spans = sorted((j.submissionTime().get().getTime(), j.completionTime().get().getTime())
+                   for j in map(store.job, ids))
+    for start, end in spans:
+        busy, until = busy + max(0, end - max(start, until)), max(until, end)
+    return {"jobs": len(ids), "jobs_busy_s": round(busy / 1000, 3)}
+
+
 def timed(spark, build, reps: int, plan=None, save=None) -> dict:
     """Each rep of ``build()`` through ``save`` (default: noop; a dict it returns joins
-    the rep's seconds, loadavg and steal share) and the best; ``plan``: plan path."""
+    the rep's seconds, loadavg, steal share and Spark jobs) and the best; ``plan``: plan path."""
     runs = []
     for r in range(reps):
         if r:
             _settle(spark)
-        load, st0, t0 = _loadavg()[0], _cpu_stat(), time.perf_counter()
+        lo, load, st0, t0 = _next_job(spark), _loadavg()[0], _cpu_stat(), time.perf_counter()
         extra = (save or _noop)(build())
         dt, st1 = time.perf_counter() - t0, _cpu_stat()
         runs.append({"s": round(dt, 3), "loadavg1": load,  # steal: share of busy time
                      "steal_share": round((st1[0] - st0[0]) / max(1, st1[1] - st0[1]), 4),
-                     **(extra or {})})
+                     **_jobs_since(spark, lo), **(extra or {})})
     if plan:
         os.makedirs(os.path.dirname(plan), exist_ok=True)
         with open(plan, "w") as f:

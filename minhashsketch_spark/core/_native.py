@@ -108,12 +108,17 @@ def _build() -> "ctypes.CDLL | None":
         os.makedirs(cache, mode=0o700, exist_ok=True)
         src = os.path.join(cache, f"minhash_{os.getpid()}.c")
         tmp_so = os.path.join(cache, f"lib_{os.getpid()}.so")
-        with open(src, "w") as f:
-            f.write(_C_SRC)
-        if not (compile_c(src, tmp_so) or compile_c(src, tmp_so, "-DMHS_CLONES=")):
-            return None
-        os.replace(tmp_so, so)  # atomic: concurrent workers never dlopen
-                                # a half-written library
+        try:
+            with open(src, "w") as f:
+                f.write(_C_SRC)
+            if not (compile_c(src, tmp_so) or compile_c(src, tmp_so, "-DMHS_CLONES=")):
+                return None
+            os.replace(tmp_so, so)  # atomic: concurrent workers never dlopen
+                                    # a half-written library
+        finally:
+            for leftover in (src, tmp_so):  # tmp_so is gone once replaced
+                if os.path.exists(leftover):
+                    os.remove(leftover)
     try:
         # refuse a library some other principal wrote into our cache path
         st = os.stat(so)

@@ -14,8 +14,9 @@ Scale notes (100 TB / 10^12 docs):
 * signatures are emitted as ``array<bigint>`` (uint64 stored as
   two's-complement — SURVEY.md H1: only *equality* is ever evaluated
   JVM-side, so signedness is safe);
-* shingle sets are transient (never a Spark column) except for candidate
-  verification, which recomputes them for the <<1% of docs in pairs.
+* shingle sets are transient and never a Spark column: candidate
+  verification (operators.verify) re-shingles the texts attached to its
+  pair spine inside its own Arrow map.
 """
 
 from __future__ import annotations

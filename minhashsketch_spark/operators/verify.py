@@ -10,14 +10,15 @@ Jaccard.
   (UINT64_MAX padding matches itself) is preserved: two empty docs have
   all-UINT64_MAX signatures, which compare equal.
 * **Exact Jaccard** (north_star: "exact Jaccard verification filters
-  pairs") recomputes distinct shingle sets only for docs that appear in at
-  least one candidate pair (a left-semi join — <<1% of the corpus at scale)
-  and counts each pair's intersection ONCE, in one ``mapInArrow`` over the
-  attached pairs: a sorted merge of the two ascending uint64 sets per pair,
-  one native call per Arrow batch (``core.shingles.intersect_count``).
-  The map emits the three set sizes, so jaccard and containment are plain
-  arithmetic on materialized columns — a filter pushed below them can
-  never copy the intersection into a join condition.
+  pairs") attaches both texts to the (gated) estimate spine and runs ONE
+  ``mapInArrow`` over (url_a, url_b, est_sim, text_a, text_b): per Arrow
+  batch it shingles both sides (``core.shingles.distinct_shingles``, once
+  per distinct text in the batch) and counts every pair's intersection with
+  one native sorted merge (``core.shingles.intersect_count``). Shingle
+  sets never become a Spark column. The map emits the three set sizes, so
+  jaccard and containment are plain arithmetic on materialized columns — a
+  filter pushed below them can never copy the intersection into a join
+  condition.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ from ..core.shingles import distinct_shingles, intersect_count, utf8_views
 
 # candidate-pair frames at or under this row count are broadcast into the
 # attach joins (pairs are <<1% of the corpus by LSH design — the broadcast
-# keeps the heavy signature/shingle frames UNSHUFFLED, guide §3.1/§8); above
+# keeps the heavy signature/text frames UNSHUFFLED, guide §3.1/§8); above
 # it the joins fall back to the shuffle plans (scale-safe default).  1M pair
 # rows ~ 60 MB framed — comfortably within executor broadcast budgets.
 BROADCAST_PAIR_LIMIT = 1_000_000
@@ -124,50 +125,12 @@ def minhash_estimate_m(pairs: DataFrame, signatures: DataFrame,
         gen, schema="url_a string, url_b string, est_sim double")
 
 
-def shingle_sets_for(docs: DataFrame, urls: DataFrame, cfg: PipelineConfig,
-                     url_col: str = "url", text_col: str = "text",
-                     broadcast_urls: bool = False) -> DataFrame:
-    """Distinct shingle-hash sets, computed only for ``urls`` (semi join).
-
-    ``shingles`` holds each set in ascending UINT64 order, stored as its
-    int64 view (SURVEY.md H1) — read it back as uint64 before any
-    order-dependent use. Texts are read zero-copy out of the Arrow string
-    buffers, as in ``compute_signatures``.
-
-    ``broadcast_urls``: the url set is known-small — broadcast the semi-join
-    build side so the corpus scan is never shuffled (guide §3.1)."""
-    import pyarrow as pa
-
-    k = cfg.k
-    url_set = urls.select(F.col("url").alias(url_col)).distinct()
-    if broadcast_urls:
-        url_set = F.broadcast(url_set)
-    needed = docs.join(url_set, on=url_col, how="left_semi")
-
-    def gen(batches) -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            sets = [distinct_shingles(text, k) for text in utf8_views(batch.column(1))]
-            offs = np.zeros(len(sets) + 1, dtype=np.int32)
-            offs[1:] = np.cumsum([xs.shape[0] for xs in sets], dtype=np.int64)
-            vals = np.concatenate(sets) if sets else np.empty(0, np.uint64)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0),
-                 pa.ListArray.from_arrays(pa.array(offs), pa.array(vals.view(np.int64)))],
-                names=["url", "shingles"])
-
-    # no ensure_parallelism here: `needed` sits downstream of the semi-join
-    # shuffle, so it already carries >= shuffle.partitions partitions (and
-    # probing .rdd on an AQE join plan can execute its stages eagerly)
-    return needed.select(F.col(url_col), F.col(text_col)).mapInArrow(
-        gen, schema="url string, shingles array<bigint>")
-
-
 def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
                    cfg: PipelineConfig, url_col: str = "url",
                    text_col: str = "text",
                    checkpoint_sigs: bool = True,
                    with_containment: bool = False,
-                   checkpoint_pairs: bool = True,
+                   checkpoint_pairs: bool | None = True,
                    est_gate: float | None = None) -> DataFrame:
     """Full verification: est_sim (reference estimator) + exact jaccard.
 
@@ -186,105 +149,94 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
     ``checkpoint_sigs=False`` when the signature frame is already
     materialized (parquet/bucketed-table-backed, or checkpointed by the
     caller): localCheckpoint'ing e.g. a full index's signatures here would
-    copy the whole index into executor storage. Likewise
-    ``checkpoint_pairs=False`` for a parquet-backed candidate table.
+    copy the whole index into executor storage. ``checkpoint_pairs``:
+    True materializes the pairs here, False says they already are
+    (a parquet-backed candidate table, or checkpointed by the caller);
+    either way their count is ~free and sizes the joins below. None says
+    the pairs are a lazy plan over inputs that are already
+    candidate-slice-sized (the streaming micro-batch): nothing is
+    materialized or counted, and AQE sizes the joins.
 
     Join strategy (guide §3.1/§8): the pair set is <<1% of the corpus by
-    LSH design, and after the eager materialization its exact size is one
-    cheap count away — when it is under ``BROADCAST_PAIR_LIMIT`` rows the
-    pair spine is BROADCAST into every attach join, so the heavy frames
-    (signatures, shingle sets) are never shuffled for the a-side attaches;
-    the planner picks the b-side joins. That one count is the only size
-    decision: the gated spine is a subset of the pre-gate pairs, so the
+    LSH design. When the counted pairs are within ``BROADCAST_PAIR_LIMIT``
+    rows, the pair spine is BROADCAST into the signature attach and the
+    (gated) estimate spine into the text attach, so neither signatures nor
+    texts are shuffled for the a-side attaches; the planner picks the
+    b-side joins. The gated spine is a subset of the counted pairs, so the
     same bound holds for it. Above the limit every join falls back to the
-    shuffle plans.
+    shuffle plans. The estimate spine has one consumer (the text attach),
+    so it is never materialized.
 
     ``est_gate``: optional est_sim pre-filter applied BEFORE the exact
-    verification (shingle recompute + intersect) — pairs below the gate
-    are dropped from the OUTPUT entirely, so only pass a gate when every
-    downstream consumer filters on ``jaccard >= threshold`` or ``is_dup``
-    and the gate is a safe margin below threshold (use
+    verification (text attach, shingling, intersection) — pairs below the
+    gate are dropped from the OUTPUT entirely, so only pass a gate when
+    every downstream consumer filters on ``jaccard >= threshold`` or
+    ``is_dup`` and the gate is a safe margin below threshold (use
     ``est_prefilter_gate(cfg)``). With that gate ``is_dup`` is unchanged
     exactly; a consumer thresholding ``jaccard`` loses each qualifying
     pair with probability <= ~3e-7 (the tail bound in
     ``est_prefilter_gate``). The gate is the single biggest verification
     win on small-vocabulary corpora: ~98% of LSH candidates are random
     band collisions whose exact jaccard is nowhere near threshold, and
-    gating them skips their shingle recompute and intersection (measured
+    gating them skips their text attach and shingling (measured
     8.5 -> 3.4 s same-session at 50k docs / 127k candidates). Callers that
     need sub-threshold rows (containment mining, estimator calibration)
     must leave it None.
     """
-    # both stages consume ``signatures``/``sets_df`` twice (a-side, b-side);
-    # EAGER localCheckpoint so the UDFs run exactly once — a lazy persist
-    # lets the two join sides race to compute the same partitions. In the
-    # full pipeline these arrive as parquet-checkpointed tables anyway.
     if checkpoint_sigs:
-        signatures = signatures.localCheckpoint()
+        signatures = signatures.localCheckpoint()  # read by both attach sides
     if checkpoint_pairs:
-        pairs = pairs.localCheckpoint()
-    # the count is ~free: pairs is either just-materialized executor storage
-    # or a parquet stage table whose count comes from footer metadata
-    small = pairs.count() <= BROADCAST_PAIR_LIMIT
+        pairs = pairs.localCheckpoint()  # computed once for the count and the estimate
+    # materialized pairs count from executor storage or parquet footers
+    small = checkpoint_pairs is not None and pairs.count() <= BROADCAST_PAIR_LIMIT
     est = minhash_estimate(F.broadcast(pairs) if small else pairs,
                            signatures, cfg)
-    # a clamped/zero gate filters nothing — take the ungated plan instead
-    # of paying an extra materialize for no pruning
+    # a clamped/zero gate filters nothing
     if est_gate is not None and est_gate > 0.0:
         est = est.filter(F.col("est_sim") >= F.lit(est_gate))
-        if small:
-            # EAGER: the gated estimate is the new (far smaller) pair
-            # spine, consumed by the shingle url set and the attach joins
-            # — materializing it runs the estimate join once. Bounded:
-            # pre-gate pairs are already under BROADCAST_PAIR_LIMIT here,
-            # so the checkpointed subset is too.
-            est = est.localCheckpoint()
-            spine = est
-        else:
-            # above the broadcast limit nothing pair-scale may enter
-            # executor storage (localCheckpoint is non-reliable): keep the
-            # gate as an inline filter before the attach joins (est is
-            # consumed once, so no recompute) and derive the shingle urls
-            # from the pair superset — extra shingle rows, same output
-            spine = pairs
-    else:
-        spine = pairs
-    all_urls = (spine.select(F.col("url_a").alias("url"))
-                .unionByName(spine.select(F.col("url_b").alias("url"))).distinct())
-    sets_df = shingle_sets_for(docs, all_urls, cfg, url_col, text_col,
-                               broadcast_urls=small).localCheckpoint()
-    sh_a = sets_df.select(F.col("url").alias("url_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sets_df.select(F.col("url").alias("url_b"), F.col("shingles").alias("sh_b"))
     if small:
-        # est is pair-sized and light (urls + two doubles): broadcasting it
-        # keeps sh_a unshuffled
+        # pair-sized and light (urls + est_sim): keeps the a-side texts unshuffled
         est = F.broadcast(est)
+    text_a = docs.select(F.col(url_col).alias("url_a"), F.col(text_col).alias("text_a"))
+    text_b = docs.select(F.col(url_col).alias("url_b"), F.col(text_col).alias("text_b"))
+    k = cfg.k
 
     # a closure, not a module-level function: cloudpickle ships a closure
     # by value, so a Python worker imports only core.shingles (~10 ms), not
     # this Spark-side module (~0.4 s to import in a fresh worker)
     def count(batches) -> "Iterator[pa.RecordBatch]":
-        """(url_a, url_b, est_sim, sh_a, sh_b) -> (url_a, url_b, est_sim,
-        n_a, n_b, inter): both set sizes and the intersection size of
-        every pair; the two arrays are dropped."""
+        """(url_a, url_b, est_sim, text_a, text_b) -> (url_a, url_b,
+        est_sim, n_a, n_b, inter): both distinct-shingle set sizes and the
+        intersection size of every pair; the texts are dropped."""
         import pyarrow as pa
 
+        def shingled(texts, memo: dict) -> tuple[np.ndarray, np.ndarray]:
+            """One side's sets, ascending uint64, concatenated in row order
+            with their offsets. A text repeated in the batch (a doc with
+            many partners) is shingled once."""
+            sets = []
+            for text in utf8_views(texts):
+                key = text.tobytes()
+                if key not in memo:
+                    memo[key] = distinct_shingles(text, k)
+                sets.append(memo[key])
+            offs = np.zeros(len(sets) + 1, dtype=np.int64)
+            offs[1:] = np.cumsum([xs.shape[0] for xs in sets], dtype=np.int64)
+            return (np.concatenate(sets) if sets else np.empty(0, np.uint64)), offs
+
         for batch in batches:
-            sa, sb = batch.column(3), batch.column(4)
-            # list offsets index the (unsliced) child values; the int64
-            # child is viewed back to uint64, the order the sets are in
-            oa = np.asarray(sa.offsets, dtype=np.int64)
-            ob = np.asarray(sb.offsets, dtype=np.int64)
-            inter = intersect_count(np.asarray(sa.values).view(np.uint64), oa,
-                                    np.asarray(sb.values).view(np.uint64), ob)
+            memo: dict = {}
+            va, oa = shingled(batch.column(3), memo)
+            vb, ob = shingled(batch.column(4), memo)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1), batch.column(2),
-                 pa.array(np.diff(oa)), pa.array(np.diff(ob)), pa.array(inter)],
+                 pa.array(np.diff(oa)), pa.array(np.diff(ob)),
+                 pa.array(intersect_count(va, oa, vb, ob))],
                 names=["url_a", "url_b", "est_sim", "n_a", "n_b", "inter"])
 
     counted = (
-        est.join(sh_a, "url_a").join(sh_b, "url_b")
-        .select("url_a", "url_b", "est_sim", "sh_a", "sh_b")
+        est.join(text_a, "url_a").join(text_b, "url_b")
+        .select("url_a", "url_b", "est_sim", "text_a", "text_b")
         .mapInArrow(count,
                     schema="url_a string, url_b string, est_sim double, "
                            "n_a bigint, n_b bigint, inter bigint")

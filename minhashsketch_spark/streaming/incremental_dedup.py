@@ -5,12 +5,11 @@ continuous-crawl dedup, composing three pillars in one operator:
 * the **bucketed seed index** (operators.cross_dedup.build_band_index):
   candidates vs the 10^12-doc base join with ZERO index-side Exchange;
 * a **delta** of post-seed batches, persisted per ``batch_id=`` partition
-  (docs + signatures + bands) with dynamic partition overwrite — the same
-  replay-idempotent layout as streaming.ingest: foreachBatch is
-  at-least-once, and a replayed batch overwrites exactly its own
-  partition. Candidates vs the delta reuse the salted ad-hoc band join
-  (the delta stays small between compactions; a periodic batch job folds
-  it into a rebuilt bucketed index, re-salting hot bands);
+  (signatures + bands + texts) with dynamic partition overwrite — the same
+  replay-idempotent layout as streaming.ingest. Candidates vs the delta
+  reuse the salted ad-hoc band join (the delta stays small between
+  compactions; a periodic batch job folds it into a rebuilt bucketed
+  index, re-salting hot bands);
 * **verified pairs out**, also per-batch-partitioned (idempotent).
 
 Emitted per batch b: verified (url_new in b, url_idx indexed before b)
@@ -18,8 +17,18 @@ pairs. WITHIN-batch pairs are deliberately not emitted — a drop's
 internal near-dups are the periodic compaction's job (and its exact dups
 are streaming.stateful_dedup's); this keeps each batch's output a pure
 function of (batch, prior index), which is what makes replay idempotent.
-A replayed batch's own half-written delta partition is excluded from its
-index view (``batch_id != b``), so replays can't pair a doc with itself.
+
+Batch b writes its delta partition FIRST and reads it back as its own
+signatures and texts, so they live in reliable storage, not executor
+storage; the pairs partition is written second. foreachBatch is at-least-once, and
+either crash point replays into the same state: both writes dynamically
+overwrite only partition b with data that is a deterministic function of
+the batch; the replay's index view excludes ``batch_id == b``, so its
+own already-written delta partition can't pair a doc with itself or add
+within-batch pairs; and batch b+1 never runs before b commits, so the
+rest of the index view is the first attempt's. Compaction runs while the
+stream is stopped (it rewrites the tables a batch reads), so it never
+folds a half-processed batch into the index.
 """
 
 from __future__ import annotations
@@ -32,9 +41,13 @@ from ..operators.cross_dedup import (
     cross_candidate_pairs,
     cross_candidate_pairs_indexed,
 )
-from ..operators.signatures import compute_signatures
-from ..operators.verify import verified_pairs
+from ..operators.signatures import SIG_SCHEMA, compute_signatures
+from ..operators.verify import est_prefilter_gate, verified_pairs
 from .ingest import DOCS_SCHEMA
+
+# a delta partition: the batch's signatures with their texts
+# (compute_signatures(keep_text=True)) under its batch_id
+DELTA_SCHEMA = SIG_SCHEMA + ", text string, batch_id int"
 
 
 def _delta_present(spark: SparkSession, delta_path: str) -> bool:
@@ -70,7 +83,7 @@ def _read_delta(spark: SparkSession, delta_path: str,
                 exclude_batch: int) -> DataFrame | None:
     if not _delta_present(spark, delta_path):  # first batch: no delta yet
         return None
-    delta = spark.read.parquet(delta_path)
+    delta = spark.read.schema(DELTA_SCHEMA).parquet(delta_path)
     return delta.filter(F.col("batch_id") != exclude_batch)
 
 
@@ -81,73 +94,51 @@ def dedup_batch_against_index(spark: SparkSession, batch_df: DataFrame,
                               est_gate: float | None | str = "auto") -> DataFrame:
     """One micro-batch: verified (url_new, url_idx, est_sim, jaccard,
     is_dup) vs seed index + earlier deltas. Pure function of its inputs.
-    ``sig_n``: pre-materialized batch signatures (the streaming handler
-    computes them once and shares them with the delta write).
+    ``sig_n``: the batch's (url, sig, bands, text) rows, already
+    materialized (the streaming handler passes its own delta partition,
+    read back); without it they are computed from ``batch_df`` here.
     ``est_gate``: "auto" applies ``est_prefilter_gate(cfg)`` (safe for the
     jaccard>=threshold / is_dup consumers of the pairs output); None keeps
     every sub-threshold candidate row."""
     if sig_n is None:
-        sig_n = compute_signatures(batch_df, cfg).localCheckpoint()
-    idx_sigs = spark.table(f"{index_table}_sigs")
-    cands = [cross_candidate_pairs_indexed(spark, sig_n, index_table)]
-    sigs = [sig_n.select("url", "sig"), idx_sigs.select("url", "sig")]
-    # index texts come from the _sigs table itself — they must survive
+        # read by both candidate joins and the verification slice
+        sig_n = compute_signatures(batch_df, cfg, keep_text=True).localCheckpoint()
+    # index texts live in the _sigs table itself — they must survive
     # compaction, which a caller-held seed-docs frame would not cover
-    docs = [batch_df.select("url", "text"), idx_sigs.select("url", "text")]
+    indexed = [spark.table(f"{index_table}_sigs")]
+    cand = cross_candidate_pairs_indexed(spark, sig_n, index_table)
     delta = _read_delta(spark, delta_path, batch_id)
     if delta is not None:
-        delta = delta.localCheckpoint()  # 2 consumers (bands + verification)
-        cands.append(cross_candidate_pairs(sig_n, delta, cfg))
-        sigs.append(delta.select("url", "sig"))
-        docs.append(delta.select("url", "text"))
-    cand = cands[0]
-    for c in cands[1:]:
-        cand = cand.unionByName(c)
+        indexed.append(delta)
+        cand = cand.unionByName(cross_candidate_pairs(sig_n, delta, cfg))
     cand = (cand.filter(F.col("url_new") != F.col("url_idx"))
             .dropDuplicates(["url_new", "url_idx"])
             .select(F.col("url_new").alias("url_a"),
-                    F.col("url_idx").alias("url_b"))
-            .localCheckpoint())
-    # restrict the sig/doc unions to the candidate partners BEFORE the
-    # per-url dedup: the r5 shape ran dropDuplicates(["url"]) over the FULL
-    # index union, re-shuffling every index row's signature and text bytes
-    # per micro-batch for a crash-window that only matters on the rows that
-    # actually join (guide §2.3 — shuffle the candidate slice, not the
-    # corpus). The pair urls are batch-scale: broadcast the semi-join build
-    # side under the same gate verified_pairs uses.
-    from ..operators.verify import BROADCAST_PAIR_LIMIT
-
-    pair_urls = (cand.select(F.col("url_a").alias("url"))
-                 .unionByName(cand.select(F.col("url_b").alias("url")))
-                 .distinct())
-    if cand.count() <= BROADCAST_PAIR_LIMIT:
-        pair_urls = F.broadcast(pair_urls)
-    # a url may legitimately appear on BOTH the index and delta side of the
-    # union during the compaction crash window (folded into _sigs, delta
-    # not yet cleared); signatures/texts are deterministic per url, so the
-    # per-url dedup (now over candidate partners only) keeps the
-    # verification joins from multiplying pair rows (ADVICE r4)
-    all_sigs = sigs[0]
-    for s in sigs[1:]:
-        all_sigs = all_sigs.unionByName(s)
-    all_sigs = (all_sigs.join(pair_urls, "url", "left_semi")
-                .dropDuplicates(["url"]))
-    all_docs = docs[0]
-    for d in docs[1:]:
-        all_docs = all_docs.unionByName(d)
-    all_docs = (all_docs.join(pair_urls, "url", "left_semi")
-                .dropDuplicates(["url"]))
-    from ..operators.verify import est_prefilter_gate
-
+                    F.col("url_idx").alias("url_b")))
+    # restrict the index and delta to the candidate partners BEFORE the
+    # union and the per-url dedup (guide §2.3 — shuffle the candidate
+    # slice, not the corpus); the batch is batch-sized and holds every
+    # url_a. Each semi-join is against one scan, so the bucketed _sigs
+    # table keeps its bucketing (no index-side Exchange). A url may
+    # legitimately sit on BOTH the index and delta side during the
+    # compaction crash window (folded into _sigs, delta not yet cleared);
+    # signatures/texts are deterministic per url, so the per-url dedup
+    # keeps the verification joins from multiplying pair rows (ADVICE r4)
+    partners = cand.select(F.explode(F.array("url_a", "url_b")).alias("url"))
+    slice_ = sig_n.select("url", "sig", "text")
+    for src in indexed:
+        slice_ = slice_.unionByName(
+            src.select("url", "sig", "text").join(partners, "url", "left_semi"))
+    slice_ = slice_.dropDuplicates(["url"])
     # the emitted pairs feed jaccard>=threshold / is_dup consumers only
     # (the entry query, compaction, the tests), so the 6-sigma est
-    # pre-gate is safe: sub-gate band collisions never get their shingles
-    # recomputed, and the per-batch pairs partitions stay tiny
+    # pre-gate is safe: sub-gate band collisions never get their texts
+    # attached or shingled, and the per-batch pairs partitions stay tiny
     if est_gate == "auto":
         est_gate = est_prefilter_gate(cfg)
-    ver = verified_pairs(cand, all_sigs, all_docs, cfg,
-                         checkpoint_sigs=False,  # batch ckpt'd, rest parquet
-                         checkpoint_pairs=False,  # materialized above
+    ver = verified_pairs(cand, slice_, slice_, cfg,
+                         checkpoint_sigs=False,  # a lazy slice of parquet scans
+                         checkpoint_pairs=None,  # candidate-slice inputs: AQE sizes
                          est_gate=est_gate)
     return ver.select(F.col("url_a").alias("url_new"),
                       F.col("url_b").alias("url_idx"),
@@ -174,25 +165,21 @@ def streaming_incremental_dedup(spark: SparkSession, input_path: str,
     )
 
     def process_batch(batch_df, bid: int) -> None:
-        batch_df = batch_df.localCheckpoint()  # consumed by dedup + delta
-        # keep_text: the delta partition needs (signatures, text) per url —
-        # the Arrow passthrough makes the checkpointed signature frame carry
-        # both, instead of re-joining the batch on url for the delta write
-        sig_n = compute_signatures(batch_df, cfg,
-                                   keep_text=True).localCheckpoint()
-        ver = dedup_batch_against_index(
-            spark, batch_df, bid, index_table, delta_path, cfg, sig_n=sig_n)
-        (ver.withColumn("batch_id", F.lit(int(bid)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(pairs_path))
-        # delta partition: docs + signatures of this batch become part of
-        # the index every LATER batch sees (written after the pairs so a
-        # crash between the writes replays into the same idempotent state)
-        (sig_n.withColumn("batch_id", F.lit(int(bid)))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id").parquet(delta_path))
+        def write(df, path: str) -> None:
+            (df.withColumn("batch_id", F.lit(int(bid)))
+               .write.mode("overwrite")
+               .option("partitionOverwriteMode", "dynamic")
+               .partitionBy("batch_id").parquet(path))
+
+        # the delta partition first: the batch's signatures and texts
+        # (keep_text passes the text through the Arrow batch), computed
+        # once; read back, it IS the batch's materialized signature frame
+        write(compute_signatures(batch_df, cfg, keep_text=True), delta_path)
+        sig_n = (spark.read.schema(DELTA_SCHEMA).parquet(delta_path)
+                 .filter(F.col("batch_id") == int(bid)))
+        write(dedup_batch_against_index(spark, batch_df, bid, index_table,
+                                        delta_path, cfg, sig_n=sig_n),
+              pairs_path)
 
     writer = (
         stream.writeStream
@@ -240,7 +227,7 @@ def compact_band_index(spark: SparkSession, index_table: str,
     sig_cols = ["url", "sig_key", "sig", "bands", "text"]
     if not _delta_present(spark, delta_path):
         return 0
-    delta = spark.read.parquet(delta_path)
+    delta = spark.read.schema(DELTA_SCHEMA).parquet(delta_path)
     n_delta = delta.count()
     if n_delta == 0:
         return 0

@@ -28,7 +28,10 @@ def test_queries_times_each_and_skips_absent_clips(tmp_path):
     for name in ("md5_fingerprint", "token_stats"):
         assert len(recs[name]["reps"]) == 1
         assert recs[name]["best_s"] == recs[name]["reps"][0]["s"] > 0
-        assert {"loadavg1", "steal_share"} <= set(recs[name]["reps"][0])
+        rep = recs[name]["reps"][0]
+        assert {"loadavg1", "steal_share"} <= set(rep)
+        # every query here runs at least one job, and no job outlasts its rep
+        assert rep["jobs"] >= 1 and 0 < rep["jobs_busy_s"] <= rep["s"]
     # the clip FASTAs are absent wherever the reference checkout is
     from __spark_entry__ import _CLIPS
 
@@ -58,3 +61,21 @@ def test_correctness_matches_the_oracle(tmp_path):
     rec = json.loads(out.read_text())["queries"]["md5_fingerprint"]
     assert rec["err"] is None and rec["hash_match"] is True
     assert rec["spark_rows"] == rec["oracle_rows"] > 0
+
+
+def test_jobs_since_counts_stream_thread_jobs(spark, tmp_path):
+    """A foreachBatch handler's jobs run on the stream thread, under the
+    stream's own job group: the id range counts them with the rest."""
+    import measure
+
+    spark.range(10).write.parquet(str(tmp_path / "in"))
+    seen = []
+    lo = measure._next_job(spark)
+    q = (spark.readStream.schema("id bigint").parquet(str(tmp_path / "in"))
+         .writeStream.foreachBatch(lambda df, bid: seen.append(df.count()))
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    rec = measure._jobs_since(spark, lo)
+    assert seen == [10]
+    assert rec["jobs"] >= 1 and rec["jobs_busy_s"] > 0

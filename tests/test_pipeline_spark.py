@@ -201,6 +201,37 @@ def test_exact_jaccard_column(spark):
         assert r["jaccard"] == pytest.approx(exact_jaccard(s1, s2), abs=1e-12)
 
 
+def test_exact_jaccard_many_pairs_per_doc(spark):
+    """40 near-identical docs: every doc sits in 39 pairs, so one Arrow
+    batch repeats each text many times. Every pair's jaccard and both
+    containments equal the NumPy set computation."""
+    rng = np.random.default_rng(40)
+    words = [f"w{i}" for i in range(60)]
+    base = [words[i] for i in rng.integers(0, 60, size=300)]
+    rows = []
+    for d in range(40):
+        toks = list(base)
+        for pos in rng.integers(0, 300, size=6):  # a few per-doc edits
+            toks[pos] = f"edit{d}x{pos}"
+        rows.append((f"d{d:02d}", " ".join(toks)))
+    docs = spark.createDataFrame(rows, "url string, text string")
+    sigs = compute_signatures(docs, CFG)
+    urls = docs.select("url")
+    pairs = (urls.withColumnRenamed("url", "url_a")
+             .crossJoin(urls.withColumnRenamed("url", "url_b"))
+             .filter(F.col("url_a") < F.col("url_b")))
+    got = verified_pairs(pairs, sigs, docs, CFG, with_containment=True).collect()
+    assert len(got) == 40 * 39 // 2
+    sets = {u: distinct_shingles(t.encode(), CFG.k) for u, t in rows}
+    for r in got:
+        a, b = sets[r["url_a"]], sets[r["url_b"]]
+        inter = np.intersect1d(a, b).shape[0]
+        union = np.union1d(a, b).shape[0]
+        assert r["jaccard"] == inter / union
+        assert (r["containment_a"], r["containment_b"]) == \
+            (inter / a.shape[0], inter / b.shape[0])
+
+
 def test_est_gate_preserves_thresholded_outputs(spark):
     """r6 est pre-gate: gating verified_pairs at est_prefilter_gate(cfg)
     must keep every jaccard>=threshold row AND every is_dup row bit-equal

@@ -318,7 +318,7 @@ def test_line_dedup_never_shuffles_text(spark):
 
 def test_verified_pairs_small_path_broadcasts_pair_spine(spark):
     """Under the pair-count gate the pair spine must be BROADCAST into the
-    attach joins (signatures / shingle sets never shuffled for the
+    attach joins (signatures / texts never shuffled for the
     a-side), and no attach is forced into a shuffled hash join: the
     planner keeps its own all-broadcast zero-extra-Exchange shape."""
     from minhashsketch_spark.operators import verify as V
@@ -358,10 +358,11 @@ def test_candidate_pairs_plans_without_jobs(spark, tmp_path):
 
 
 def test_verified_pairs_intersects_once_in_one_arrow_map(spark):
-    """The exact-jaccard intersection runs once per pair, in ONE Python map
-    over the attach spine (url_a, url_b, est_sim, sh_a, sh_b) — never as a
-    JVM array_intersect, and a downstream jaccard filter stays above the
-    map (it cannot copy the intersection into a join condition)."""
+    """Both sides are shingled and intersected once per pair, in ONE
+    Python map over the attach spine (url_a, url_b, est_sim, text_a,
+    text_b) — never as a JVM array_intersect, and a downstream jaccard
+    filter stays above the map (it cannot copy the intersection into a
+    join condition)."""
     import re
 
     from minhashsketch_spark.operators import verify as V
@@ -384,9 +385,41 @@ def test_verified_pairs_intersects_once_in_one_arrow_map(spark):
                        plan, re.M)
     assert detail, plan
     assert [re.sub(r"#\d+L?$", "", c) for c in detail.group(1).split(", ")] == \
-        ["url_a", "url_b", "est_sim", "sh_a", "sh_b"], plan
+        ["url_a", "url_b", "est_sim", "text_a", "text_b"], plan
     for cond in re.findall(r"Join condition: (.*)", plan):
         assert cond == "None", cond
+
+
+def test_verified_pairs_over_parquet_plans_one_python_map(spark, tmp_path):
+    """Over parquet-backed pairs, signatures and docs with both checkpoint
+    options off, verification is one plan: exactly one Python map (the
+    shingle-and-intersect map) and no LogicalRDD — no side table or spine
+    is materialized into executor storage."""
+    import re
+
+    from minhashsketch_spark.operators import verify as V
+    from minhashsketch_spark.operators.lsh import candidate_pairs
+    from minhashsketch_spark.operators.signatures import compute_signatures
+    from minhashsketch_spark.sources.corpus import corpus_dataframe
+
+    cfg = PipelineConfig(k=9, m=1, t=16, bands=4, rows=4, seed=1, threshold=0.7)
+    docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
+    paths = {n: str(tmp_path / n) for n in ("docs", "sigs", "pairs")}
+    docs.select("url", "text").write.parquet(paths["docs"])
+    docs = spark.read.parquet(paths["docs"])
+    compute_signatures(docs, cfg).write.parquet(paths["sigs"])
+    sigs = spark.read.parquet(paths["sigs"])
+    candidate_pairs(sigs, cfg).write.parquet(paths["pairs"])
+    pairs = spark.read.parquet(paths["pairs"])
+    ver = V.verified_pairs(pairs, sigs, docs, cfg, checkpoint_sigs=False,
+                           checkpoint_pairs=False,
+                           est_gate=V.est_prefilter_gate(cfg))
+    plan = _plan(ver)
+    tree = plan.split("\n\n")[0]
+    maps = re.findall(r"(MapInArrow|MapInPandas|\w*EvalPython\w*) \(\d+\)", tree)
+    assert maps == ["MapInArrow"], plan
+    assert "LogicalRDD" not in ver._jdf.queryExecution().optimizedPlan().toString()
+    assert "Scan ExistingRDD" not in plan, plan
 
 
 def test_embedding_near_dup_attach_is_broadcast(spark):

@@ -149,6 +149,31 @@ def test_native_minhash_equals_numpy(tmp_path, monkeypatch):
             assert np.array_equal(got, ref), n
 
 
+def test_native_build_leaves_only_the_library(tmp_path, monkeypatch):
+    """A build into an empty cache dir leaves ``libminhash.so`` and
+    nothing else there: the per-process C source and temporary library
+    are removed, and a failed compile leaves the dir empty."""
+    import os
+    import shutil
+
+    from minhashsketch_spark.core import _native
+
+    if not any(shutil.which(cc) for cc in ("cc", "gcc", "clang")):
+        pytest.skip("no C compiler on PATH")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "ok"))
+    assert _native._build() is not None
+    assert os.listdir(_native._cache_dir()) == ["libminhash.so"]
+
+    def half_written(src, so, *flags):
+        open(so, "wb").close()
+        return False
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "fail"))
+    monkeypatch.setattr(_native, "compile_c", half_written)
+    assert _native._build() is None
+    assert os.listdir(_native._cache_dir()) == []
+
+
 def test_native_intersect_count_equals_numpy(monkeypatch):
     """The native sorted merge, its NumPy fallback and Python set
     intersection agree on a batch of set pairs — including sets that
