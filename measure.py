@@ -193,15 +193,16 @@ def prepare(n_docs: int) -> str:
 
 def corpus_jobs(spark, docs, run_dir: str, step: str) -> dict:
     """``run``: the near-dup legs as ``run_pipeline`` stages them (signatures to parquet;
-    candidates + estimate read back, pairs counted); ``ops``: five operators."""
+    candidates + estimate read back, pairs counted); ``ops``: eight operators."""
     from pyspark.sql import Observation, functions as F
 
     from minhashsketch_spark.config import PipelineConfig
-    from minhashsketch_spark.operators import (dedup_corpus as dc, lsh, signatures, text, urls,
-                                               verify)
+    from minhashsketch_spark.operators import (dedup, dedup_corpus as dc, lsh, signatures,
+                                               substring, text, urls, verify)
+    from minhashsketch_spark.pipeline import run_pipeline
 
+    cfg = PipelineConfig.from_threshold(k=9, m=1, t=128, threshold=0.7, seed=42)
     if step == "run":
-        cfg = PipelineConfig.from_threshold(k=9, m=1, t=128, threshold=0.7, seed=42)
         path = f"{run_dir}/signatures"
 
         def join_verify():
@@ -215,17 +216,25 @@ def corpus_jobs(spark, docs, run_dir: str, step: str) -> dict:
         return {"signatures": (lambda: signatures.compute_signatures(docs, cfg),
                                lambda df: df.write.mode("overwrite").parquet(path)),
                 "join_verify": (join_verify, counted)}
-    # the keeper's stand-in clusters, off the clock: exact-content groups of >= 2
+    # off the clock: the keeper's stand-in clusters (exact-content groups of >= 2)
+    # and the signatures and candidates stages
     clusters = (docs.selectExpr("url", "min(url) OVER (PARTITION BY md5(text)) cluster_id",
                                 "count(*) OVER (PARTITION BY md5(text)) n")
                 .filter("n >= 2").drop("n").localCheckpoint())
+    st = run_pipeline(spark, docs, cfg, checkpoint_root=f"{run_dir}/stages")
     return {k: (build, None) for k, build in {
         "exact_dedup_corpus": lambda: dc.exact_dedup_corpus(docs, id_col="url", text_col="text"),
         "line_dedup": lambda: dc.line_dedup_stats(docs, id_col="url"),
         "url_dedup": lambda: urls.url_dedup_stats(docs),
         "domain_stats": lambda: urls.domain_stats(docs),
         "near_dedup_best": lambda: dc.near_dedup_corpus_best(docs, clusters,
-                                                             text.quality_score_expr())}.items()}
+                                                             text.quality_score_expr()),
+        "verified_pairs": lambda: verify.verified_pairs(
+            st["candidates"], st["signatures"], docs, cfg, checkpoint_sigs=False,
+            checkpoint_pairs=False, est_gate=verify.est_prefilter_gate(cfg)),
+        # k=32: at 50k docs the default 8-byte grams pair up random text (> 15 GB of spill)
+        "substring_dup_pairs": lambda: substring.substring_dup_pairs(docs, k=32),
+        "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(docs, id_col="url")}.items()}
 
 
 def scaling(step: str, n_docs: int, cpus: int) -> dict:

@@ -110,6 +110,7 @@ def connected_components(pairs: DataFrame, max_iterations: int = 20,
     fewer full scan of ``pairs`` at scale.
     """
     spark = pairs.sparkSession
+    # kept on an sf0.1 A/B: union-find 0.18-0.23 s in 4 jobs, the loop 2.96-3.63 s in 42
     if small_graph_threshold > 0:
         if n_edges is None:
             n_edges = pairs.count()

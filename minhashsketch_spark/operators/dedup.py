@@ -69,7 +69,8 @@ def ngram_jaccard_pairs(docs: DataFrame, min_jaccard: float = 0.5,
     carries no signal and its pair expansion is O(df^2) — same skew story
     as LSH hot buckets) while still counting toward each doc's set size, so
     the Jaccard denominator is exact and only pairs sharing nothing but
-    ultra-common trigrams are missed.
+    ultra-common trigrams are missed. No size gate or count() probe picks
+    the join plans: AQE sizes them at runtime.
     """
     # shuffle 8-byte hashed keys instead of raw trigram strings (the join on
     # trigrams is the widest shuffle of the dedup family; xxhash64 collisions
@@ -84,15 +85,6 @@ def ngram_jaccard_pairs(docs: DataFrame, min_jaccard: float = 0.5,
           .select(F.col(id_col), F.xxhash64("trigram").alias("tgh"))
           .localCheckpoint())
     sizes = tg.groupBy(id_col).agg(F.count("*").alias("n_tg"))
-    # the per-doc size table is one small row per doc: broadcast it into
-    # the two denominator attaches when the corpus is broadcast-sized, so
-    # the (id_a, id_b, n_common) pair aggregate is never re-shuffled for
-    # them (guide §3.1; falls back to the shuffle joins at scale). The
-    # gate counts the aggregated frame itself (one extra hash-agg over the
-    # checkpointed 8-byte keys — cheap at any scale, and the only bound
-    # that is actually the broadcast's row count).
-    if sizes.count() <= 2_000_000:
-        sizes = F.broadcast(sizes)
     doc_freq = tg.groupBy("tgh").agg(F.count("*").alias("df"))
     rare = tg.join(doc_freq.filter(F.col("df") <= max_df).select("tgh"), "tgh")
     a = rare.select(F.col(id_col).alias("id_a"), "tgh")

@@ -24,11 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, payload binary, mime string, "
-    "width int, height int, duration_ms int"
-)
-
 FEATURE_SCHEMA = ("media_id bigint, kind string, n_bytes bigint, "
                   "feature array<float>, hist array<int>")
 

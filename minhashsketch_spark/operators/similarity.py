@@ -20,12 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-# embedding tables at or under this row count are broadcast into the
-# exact-cosine attach joins of embedding_near_dup_pairs (~64 doubles + id
-# per row -> <= ~160 MB framed); larger tables keep the shuffle-join plan
-BROADCAST_VECTOR_LIMIT = 300_000
-
-
 def _cosine(a, b):
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                       F.lit(0.0), lambda acc, v: acc + v)
@@ -267,7 +261,10 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     pytest) — while merely-similar pairs split across a hot bucket rely on
     the other n_tables-1 independent tables for recall.
     A single-table 12-plane join has ~0.16 recall at cosine 0.9 — multiple
-    independent tables are what make recall approach 1 (1-(1-p^r)^T)."""
+    independent tables are what make recall approach 1 (1-(1-p^r)^T).
+
+    No size gate picks the attach plan: the vector table's file statistics
+    (parquet input) or AQE size the exact-cosine joins."""
     from ..partitioning import eager_if_python
 
     # hyperplane UDF output feeds the two-consumer sizing fan-out below —
@@ -328,9 +325,11 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     # plan shuffled AND sorted the (pair x 64-double-array) intermediate
     # for the second attach. Instead: (a) per-vector norms are computed
     # ONCE per embedding row (identical fold expression, so the floats are
-    # bit-equal to the per-pair evaluation they replace); (b) when the
-    # vector table is broadcast-sized it is broadcast into both attaches
-    # (equi-only — nothing shuffled or sorted before the dedup); (c) the
+    # bit-equal to the per-pair evaluation they replace); (b) no hint sizes
+    # the attaches: a parquet-backed vector table under
+    # spark.sql.autoBroadcastJoinThreshold is broadcast into both (equi-only
+    # — nothing shuffled or sorted before the dedup), anything else is
+    # sized by AQE at runtime; (c) the
     # cosine is computed in ONE projection and the pair dedup sits between
     # that projection and the threshold filter: an Aggregate is a predicate
     # -pushdown barrier, so the filter cannot be folded into the second
@@ -338,14 +337,10 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.9,
     # dot-product fold per matched row on top of the projection's copy
     # (measured 2-4x on the attach stage). Cosine per pair is
     # deterministic, so dedup-then-filter equals filter-then-dedup.
-    # Fallback above the gate: the r5 shuffle joins.
     norm = F.sqrt(F.aggregate(F.transform(F.col("v"), lambda x: x * x),
                               F.lit(0.0), lambda acc, v: acc + v))
     c = (embeddings.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
          .withColumn("nv", norm))
-    small = embeddings.count() <= BROADCAST_VECTOR_LIMIT
-    if small:
-        c = F.broadcast(c)
     va = c.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"),
                   F.col("nv").alias("na"))
     vb = c.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"),

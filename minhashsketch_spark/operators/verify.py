@@ -35,14 +35,6 @@ from ..config import PipelineConfig
 from ..core.shingles import distinct_shingles, intersect_count, utf8_views
 
 
-# candidate-pair frames at or under this row count are broadcast into the
-# attach joins (pairs are <<1% of the corpus by LSH design — the broadcast
-# keeps the heavy signature/text frames UNSHUFFLED, guide §3.1/§8); above
-# it the joins fall back to the shuffle plans (scale-safe default).  1M pair
-# rows ~ 60 MB framed — comfortably within executor broadcast budgets.
-BROADCAST_PAIR_LIMIT = 1_000_000
-
-
 def est_prefilter_gate(cfg: PipelineConfig) -> float:
     """Safe est_sim pre-gate for exact verification: ``threshold - 6
     sigma`` where sigma is the t-sample binomial std of the estimator at
@@ -149,23 +141,15 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
     ``checkpoint_sigs=False`` when the signature frame is already
     materialized (parquet/bucketed-table-backed, or checkpointed by the
     caller): localCheckpoint'ing e.g. a full index's signatures here would
-    copy the whole index into executor storage. ``checkpoint_pairs``:
-    True materializes the pairs here, False says they already are
-    (a parquet-backed candidate table, or checkpointed by the caller);
-    either way their count is ~free and sizes the joins below. None says
-    the pairs are a lazy plan over inputs that are already
-    candidate-slice-sized (the streaming micro-batch): nothing is
-    materialized or counted, and AQE sizes the joins.
+    copy the whole index into executor storage. ``checkpoint_pairs``
+    selects nothing; it is accepted for existing callers.
 
     Join strategy (guide §3.1/§8): the pair set is <<1% of the corpus by
-    LSH design. When the counted pairs are within ``BROADCAST_PAIR_LIMIT``
-    rows, the pair spine is BROADCAST into the signature attach and the
-    (gated) estimate spine into the text attach, so neither signatures nor
-    texts are shuffled for the a-side attaches; the planner picks the
-    b-side joins. The gated spine is a subset of the counted pairs, so the
-    same bound holds for it. Above the limit every join falls back to the
-    shuffle plans. The estimate spine has one consumer (the text attach),
-    so it is never materialized.
+    LSH design, and no size gate or count() probe picks the attach plans.
+    Parquet-backed pairs are sized by their file length
+    (``spark.sql.autoBroadcastJoinThreshold``); anything else, the
+    estimate spine included, by AQE at runtime. Pairs and the estimate
+    spine each have one consumer, so neither is materialized.
 
     ``est_gate``: optional est_sim pre-filter applied BEFORE the exact
     verification (text attach, shingling, intersection) — pairs below the
@@ -185,18 +169,10 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
     """
     if checkpoint_sigs:
         signatures = signatures.localCheckpoint()  # read by both attach sides
-    if checkpoint_pairs:
-        pairs = pairs.localCheckpoint()  # computed once for the count and the estimate
-    # materialized pairs count from executor storage or parquet footers
-    small = checkpoint_pairs is not None and pairs.count() <= BROADCAST_PAIR_LIMIT
-    est = minhash_estimate(F.broadcast(pairs) if small else pairs,
-                           signatures, cfg)
+    est = minhash_estimate(pairs, signatures, cfg)
     # a clamped/zero gate filters nothing
     if est_gate is not None and est_gate > 0.0:
         est = est.filter(F.col("est_sim") >= F.lit(est_gate))
-    if small:
-        # pair-sized and light (urls + est_sim): keeps the a-side texts unshuffled
-        est = F.broadcast(est)
     text_a = docs.select(F.col(url_col).alias("url_a"), F.col(text_col).alias("text_a"))
     text_b = docs.select(F.col(url_col).alias("url_b"), F.col(text_col).alias("text_b"))
     k = cfg.k

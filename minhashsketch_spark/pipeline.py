@@ -23,7 +23,7 @@ from .config import PipelineConfig
 from .operators.connected_components import connected_components
 from .operators.lsh import candidate_pairs
 from .operators.signatures import compute_signatures
-from .operators.verify import BROADCAST_PAIR_LIMIT, minhash_estimate
+from .operators.verify import minhash_estimate
 from .sources.io import StageStore
 
 # auto-created checkpoint roots (no caller-provided checkpoint_root): each
@@ -130,13 +130,11 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     candidates = stage("candidates",
                        lambda: candidate_pairs(signatures, cfg, buckets),
                        observed=(buckets,))
-    # the candidates manifest exists here (resumed or just written): its
-    # row count sizes the broadcast without a count() job
-    small = store.manifest("candidates")["rows"] <= BROADCAST_PAIR_LIMIT
+    # the candidates stage is parquet: its file length sizes the joins
+    # against spark.sql.autoBroadcastJoinThreshold
     verified = stage(
         "verified",
-        lambda: minhash_estimate(F.broadcast(candidates) if small else candidates,
-                                 signatures, cfg)
+        lambda: minhash_estimate(candidates, signatures, cfg)
         .select("url_a", "url_b", "est_sim",
                 (F.col("est_sim") >= F.lit(cfg.threshold)).alias("is_dup")),
         # observed on the stage write — the clusters stage reads it from

@@ -138,7 +138,6 @@ def dedup_batch_against_index(spark: SparkSession, batch_df: DataFrame,
         est_gate = est_prefilter_gate(cfg)
     ver = verified_pairs(cand, slice_, slice_, cfg,
                          checkpoint_sigs=False,  # a lazy slice of parquet scans
-                         checkpoint_pairs=None,  # candidate-slice inputs: AQE sizes
                          est_gate=est_gate)
     return ver.select(F.col("url_a").alias("url_new"),
                       F.col("url_b").alias("url_idx"),

@@ -79,3 +79,19 @@ def test_jobs_since_counts_stream_thread_jobs(spark, tmp_path):
     rec = measure._jobs_since(spark, lo)
     assert seen == [10]
     assert rec["jobs"] >= 1 and rec["jobs_busy_s"] > 0
+
+
+def test_scaling_ops_times_the_size_gated_operators(spark, tmp_path):
+    """``scaling ops`` has a leg for each operator whose joins a size gate
+    picked (verified_pairs over run_pipeline's stages, substring_dup_pairs,
+    ngram_jaccard_pairs) next to the older five, and every leg runs."""
+    import measure
+    from minhashsketch_spark.sources.corpus import corpus_dataframe
+
+    docs, _ = corpus_dataframe(spark, n_docs=40, seed=3)
+    legs = measure.corpus_jobs(spark, docs.select("url", "text"), str(tmp_path), "ops")
+    assert list(legs)[-3:] == ["verified_pairs", "substring_dup_pairs", "ngram_jaccard_pairs"]
+    assert len(legs) == 8
+    for build, save in legs.values():
+        assert save is None
+        measure._noop(build())

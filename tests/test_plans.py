@@ -317,10 +317,10 @@ def test_line_dedup_never_shuffles_text(spark):
 
 
 def test_verified_pairs_small_path_broadcasts_pair_spine(spark):
-    """Under the pair-count gate the pair spine must be BROADCAST into the
-    attach joins (signatures / texts never shuffled for the
-    a-side), and no attach is forced into a shuffled hash join: the
-    planner keeps its own all-broadcast zero-extra-Exchange shape."""
+    """A small pair spine is BROADCAST into the attach joins, and no attach
+    is forced into a shuffled hash join. No count() gate sizes the joins
+    any more, so this is AQE's executed plan: its final plan, not the
+    initial one, must show the broadcast."""
     from minhashsketch_spark.operators import verify as V
     from minhashsketch_spark.operators.lsh import candidate_pairs
     from minhashsketch_spark.operators.signatures import compute_signatures
@@ -330,9 +330,13 @@ def test_verified_pairs_small_path_broadcasts_pair_spine(spark):
     docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
     sigs = compute_signatures(docs, cfg).localCheckpoint()
     pairs = candidate_pairs(sigs, cfg)
-    plan = _plan(V.verified_pairs(pairs, sigs, docs, cfg, checkpoint_sigs=False))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "ShuffledHashJoin" not in plan, plan
+    ver = V.verified_pairs(pairs, sigs, docs, cfg, checkpoint_sigs=False)
+    assert ver.collect()
+    plan = _plan(ver)
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin" in final, plan
+    assert "ShuffledHashJoin" not in final, plan
 
 
 def test_candidate_pairs_plans_without_jobs(spark, tmp_path):
@@ -357,6 +361,70 @@ def test_candidate_pairs_plans_without_jobs(spark, tmp_path):
     assert n > 0 and jobs
 
 
+def test_minhash_estimate_over_parquet_candidates_broadcasts(spark, tmp_path):
+    """A small parquet-backed candidates stage, passed with no hint, is
+    sized by its file length: the estimate plans broadcast joins and no
+    sort-merge join (run_pipeline's verified stage)."""
+    from minhashsketch_spark.operators.lsh import candidate_pairs
+    from minhashsketch_spark.operators.signatures import compute_signatures
+    from minhashsketch_spark.operators.verify import minhash_estimate
+    from minhashsketch_spark.sources.corpus import corpus_dataframe
+
+    cfg = PipelineConfig(k=9, m=1, t=16, bands=4, rows=4, seed=1, threshold=0.7)
+    docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
+    paths = {n: str(tmp_path / n) for n in ("sigs", "cands")}
+    compute_signatures(docs, cfg).write.parquet(paths["sigs"])
+    sigs = spark.read.parquet(paths["sigs"])
+    candidate_pairs(sigs, cfg).write.parquet(paths["cands"])
+    plan = _plan(minhash_estimate(spark.read.parquet(paths["cands"]), sigs, cfg))
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def _build_jobs(spark, group, build) -> int:
+    return len(jobs_in_group(spark, group, build)[1])
+
+
+def test_verified_pairs_plans_without_jobs(spark):
+    """No count() probe or checkpoint runs while verified_pairs is built,
+    whatever checkpoint_pairs says."""
+    from minhashsketch_spark.operators import verify as V
+    from minhashsketch_spark.operators.lsh import candidate_pairs
+    from minhashsketch_spark.operators.signatures import compute_signatures
+    from minhashsketch_spark.sources.corpus import corpus_dataframe
+
+    cfg = PipelineConfig(k=9, m=1, t=16, bands=4, rows=4, seed=1, threshold=0.7)
+    docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
+    sigs = compute_signatures(docs, cfg).localCheckpoint()
+    for flag in (True, False):
+        assert _build_jobs(spark, f"verified_pairs_build_{flag}", lambda: V.verified_pairs(
+            candidate_pairs(sigs, cfg), sigs, docs, cfg, checkpoint_sigs=False,
+            checkpoint_pairs=flag)) == 0
+
+
+def test_pair_operators_build_runs_only_their_checkpoint(spark):
+    """ngram_jaccard_pairs and embedding_near_dup_pairs each materialize one
+    explode or UDF output while being built, and run no other job: no
+    count() probe sizes their joins."""
+    from minhashsketch_spark.operators import dedup as D
+    from minhashsketch_spark.operators import similarity as S
+    from minhashsketch_spark.partitioning import eager_if_python
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    cases = {
+        "ngram": (lambda: D.ngram_jaccard_pairs(docs, min_jaccard=0.02),
+                  lambda: D.trigrams(docs).select(
+                      "doc_id", F.xxhash64("trigram")).localCheckpoint()),
+        "embedding": (lambda: S.embedding_near_dup_pairs(emb, threshold=0.4,
+                                                         n_tables=4, n_planes=4),
+                      lambda: eager_if_python(S.hyperplane_bands(emb, 4, 4, 7, 64))),
+    }
+    for name, (build, checkpoint) in cases.items():
+        n = _build_jobs(spark, f"{name}_checkpoint", checkpoint)
+        assert n >= 1 and _build_jobs(spark, f"{name}_build", build) == n, name
+
+
 def test_verified_pairs_intersects_once_in_one_arrow_map(spark):
     """Both sides are shingled and intersected once per pair, in ONE
     Python map over the attach spine (url_a, url_b, est_sim, text_a,
@@ -373,7 +441,9 @@ def test_verified_pairs_intersects_once_in_one_arrow_map(spark):
     cfg = PipelineConfig(k=9, m=1, t=16, bands=4, rows=4, seed=1, threshold=0.7)
     docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
     sigs = compute_signatures(docs, cfg).localCheckpoint()
-    pairs = candidate_pairs(sigs, cfg)
+    # materialized: candidate_pairs' own joins (its salt constraint, url_a <
+    # url_b) carry conditions; this test is about the verify joins above them
+    pairs = candidate_pairs(sigs, cfg).localCheckpoint()
     ver = V.verified_pairs(pairs, sigs, docs, cfg, checkpoint_sigs=False,
                            with_containment=True)
     plan = _plan(ver.filter(F.col("jaccard") >= cfg.threshold))
@@ -423,9 +493,10 @@ def test_verified_pairs_over_parquet_plans_one_python_map(spark, tmp_path):
 
 
 def test_embedding_near_dup_attach_is_broadcast(spark):
-    """r6: under the vector-table gate the exact-cosine attaches must be
-    broadcast EQUI joins — the candidate set is never sort-merge-joined
-    against the vector table, and the cosine fold must NOT be folded into
+    """A small parquet vector table, sized by its file statistics (no
+    hint), makes the exact-cosine attaches broadcast EQUI joins — the
+    candidate set is never sort-merge-joined against the vector table,
+    and the cosine fold must NOT be folded into
     a join condition (Catalyst would evaluate the whole dot product per
     matched row on top of the projection's copy; the dedup aggregate
     between projection and threshold filter is the pushdown barrier)."""
