@@ -1,10 +1,13 @@
 """End-to-end near-duplicate pipeline with checkpointed, resumable stages.
 
-config -> read documents -> [signatures] -> [candidates] -> [verified]
-       -> [clusters], each [stage] written as a table keyed by config hash
-(SURVEY.md §3.4). Per-stage manifests record rows in/out + stage metrics
-(north_rule: "resumable from checkpoint with per-partition lineage +
-metrics").
+config -> read documents -> [signatures] -> [verified] -> [clusters],
+each [stage] written as a table keyed by config hash (SURVEY.md §3.4).
+The verified write runs the LSH band self-join itself, so the candidate
+pairs are never written on their own. Per-stage manifests record rows
+in/out + stage metrics (north_rule: "resumable from checkpoint with
+per-partition lineage + metrics"); the verified manifest holds the whole
+candidate funnel: ``rows`` (the candidate count), the bucket metrics and
+``n_dup_pairs``.
 """
 
 from __future__ import annotations
@@ -86,7 +89,8 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                  stage_key: str | None = None) -> dict:
     """Returns {"signatures", "candidates", "verified", "clusters"}
     DataFrames, plus "timings": {stage: seconds} for the stages this call
-    wrote (a resumed stage has no entry).
+    wrote (a resumed stage has no entry). "candidates" is the verified
+    stage's (url_a, url_b) projection, not a stage of its own.
 
     With ``checkpoint_root`` set, each stage is persisted and a re-run skips
     completed stages (kill/resume-safe: manifests are written atomically
@@ -125,21 +129,21 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
         return df
 
     signatures = stage("signatures", lambda: compute_signatures(docs, cfg, url_col, text_col))
-    # bucket metrics, observed on the sizes aggregate the write computes
+    # the band self-join runs inside the verified write, its only consumer:
+    # every candidate pair joins exactly one signature on each side, so the
+    # write's row count is the candidate count. Bucket metrics are observed
+    # on the sizes aggregate it computes
     buckets = Observation()
-    candidates = stage("candidates",
-                       lambda: candidate_pairs(signatures, cfg, buckets),
-                       observed=(buckets,))
-    # the candidates stage is parquet: its file length sizes the joins
-    # against spark.sql.autoBroadcastJoinThreshold
     verified = stage(
         "verified",
-        lambda: minhash_estimate(candidates, signatures, cfg)
+        lambda: minhash_estimate(candidate_pairs(signatures, cfg, buckets),
+                                 signatures, cfg)
         .select("url_a", "url_b", "est_sim",
                 (F.col("est_sim") >= F.lit(cfg.threshold)).alias("is_dup")),
-        # observed on the stage write — the clusters stage reads it from
-        # the manifest instead of re-counting
-        extra_aggs={"n_dup_pairs": F.sum(F.col("is_dup").cast("long"))})
+        # the clusters stage reads the dup-pair count from the manifest
+        # instead of re-counting
+        extra_aggs={"n_dup_pairs": F.sum(F.col("is_dup").cast("long"))},
+        observed=(buckets,))
     n_edges = store.manifest("verified").get("metrics", {}).get("n_dup_pairs")
     clusters = stage("clusters",
                      lambda: connected_components(
@@ -147,7 +151,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                          cfg.max_cc_iterations, n_edges=n_edges))
     return {
         "signatures": signatures,
-        "candidates": candidates,
+        "candidates": verified.select("url_a", "url_b"),
         "verified": verified,
         "clusters": clusters,
         "timings": timings,

@@ -412,23 +412,22 @@ def test_kill_mid_stage_resume(spark, tmp_path):
     want = sorted((r["url"], r["cluster_id"]) for r in r_clean["clusters"].collect())
 
     killed_root = str(tmp_path / "killed")
-    # run once fully, then simulate the kill: drop manifests for candidates
-    # and later stages, and corrupt the candidates data dir
+    # run once fully, then simulate the kill: drop manifests for verified
+    # and later stages, and corrupt the verified data dir
     run_pipeline(spark, docs_df, cfg, checkpoint_root=killed_root)
     chash = cfg.config_hash()
     base = os.path.join(killed_root, chash)
-    for stage in ("candidates", "verified", "clusters"):
+    for stage in ("verified", "clusters"):
         os.remove(os.path.join(base, f"{stage}.manifest.json"))
-        if stage != "candidates":
-            shutil.rmtree(os.path.join(base, stage))
+    shutil.rmtree(os.path.join(base, "clusters"))
     # half-written stage: truncate one parquet part file
-    parts = [f for f in os.listdir(os.path.join(base, "candidates")) if f.endswith(".parquet")]
-    with open(os.path.join(base, "candidates", parts[0]), "wb") as f:
+    parts = [f for f in os.listdir(os.path.join(base, "verified")) if f.endswith(".parquet")]
+    with open(os.path.join(base, "verified", parts[0]), "wb") as f:
         f.write(b"corrupt")
 
     r2 = run_pipeline(spark, docs_df, cfg, checkpoint_root=killed_root)
     assert "signatures" not in r2["timings"]          # completed stage reused
-    assert "candidates" in r2["timings"]              # killed stage recomputed
+    assert "verified" in r2["timings"]                # killed stage recomputed
     got = sorted((r["url"], r["cluster_id"]) for r in r2["clusters"].collect())
     assert got == want
 
@@ -540,9 +539,10 @@ def _direct_bucket_metrics(signatures, cap):
 @pytest.mark.parametrize("workload", ["shortdoc", "longdoc"])
 def test_candidates_manifest_carries_bucket_metrics(spark, tmp_path, bench_inputs,
                                                     workload, cap):
-    """The bucket metrics observed on the candidates write equal a direct
-    aggregate over bucket_stats. At cap 4 salting and chain reps engage,
-    so the salted frame (and the observation in it) has three consumers."""
+    """The bucket metrics observed on the verified write (which runs the
+    band self-join) equal a direct aggregate over bucket_stats. At cap 4
+    salting and chain reps engage, so the salted frame (and the
+    observation in it) has three consumers."""
     from minhashsketch_spark.sources.io import StageStore
 
     cfg = PipelineConfig.from_threshold(k=9, m=1, t=128, threshold=0.7,
@@ -550,9 +550,10 @@ def test_candidates_manifest_carries_bucket_metrics(spark, tmp_path, bench_input
     docs = spark.read.parquet(f"{bench_inputs[workload]}/docs.parquet")
     root = str(tmp_path / "ckpt")
     r = run_pipeline(spark, docs, cfg, checkpoint_root=root)
-    m = StageStore(spark, root, cfg.config_hash()).manifest("candidates")
+    m = StageStore(spark, root, cfg.config_hash()).manifest("verified")
     direct = _direct_bucket_metrics(r["signatures"], cap)
-    assert m["metrics"] == direct
+    assert m["metrics"] == {**direct,
+                            "n_dup_pairs": r["verified"].filter("is_dup").count()}
     assert direct["band_rows"] == docs.count() * cfg.bands
     assert m["rows"] == r["candidates"].count()
     assert (direct["buckets_over_cap"] > 0) == (cap == 4)
@@ -560,7 +561,7 @@ def test_candidates_manifest_carries_bucket_metrics(spark, tmp_path, bench_input
 
 def test_candidates_metrics_without_any_collision(spark, tmp_path):
     """No two docs share a band key: every candidates branch is empty, and
-    the bucket metrics must still reach the manifest."""
+    the bucket metrics must still reach the verified manifest."""
     from minhashsketch_spark.sources.io import StageStore
 
     docs = spark.createDataFrame(
@@ -568,12 +569,38 @@ def test_candidates_metrics_without_any_collision(spark, tmp_path):
         "url string, text string")
     root = str(tmp_path / "ckpt")
     r = run_pipeline(spark, docs, CFG, checkpoint_root=root)
-    m = StageStore(spark, root, CFG.config_hash()).manifest("candidates")
+    m = StageStore(spark, root, CFG.config_hash()).manifest("verified")
     assert m["rows"] == 0
-    assert m["metrics"] == _direct_bucket_metrics(r["signatures"], CFG.bucket_cap) == {
+    direct = _direct_bucket_metrics(r["signatures"], CFG.bucket_cap)
+    assert m["metrics"] == {**direct, "n_dup_pairs": 0}
+    assert direct == {
         "buckets": 5 * CFG.bands, "max_bucket": 1, "buckets_over_cap": 0,
         "band_rows": 5 * CFG.bands, "band_pairs": 0.0}
 
+
+# jobs one run_pipeline pass submits over the longdoc bench input: 14 with
+# the band self-join inside the verified write (16 when it wrote a
+# candidates stage of its own)
+PIPELINE_LONGDOC_JOBS = 14
+
+
+def test_pipeline_pass_job_count(spark, tmp_path, bench_inputs):
+    """One pass writes three stages in a pinned number of jobs, and a
+    resumed pass submits none."""
+    import os
+
+    docs = spark.read.parquet(f"{bench_inputs['longdoc']}/docs.parquet")
+    root = str(tmp_path / "ckpt")
+    cfg = PipelineConfig.from_threshold(k=9, m=1, t=128, threshold=0.7, seed=42)
+    _, jobs = jobs_in_group(spark, "pipeline_pass",
+                            lambda: run_pipeline(spark, docs, cfg, checkpoint_root=root))
+    assert len(jobs) <= PIPELINE_LONGDOC_JOBS
+    assert sorted(f for f in os.listdir(os.path.join(root, cfg.config_hash()))
+                  if f.endswith(".manifest.json")) == [
+        "clusters.manifest.json", "signatures.manifest.json", "verified.manifest.json"]
+    again, jobs = jobs_in_group(spark, "pipeline_resume",
+                                lambda: run_pipeline(spark, docs, cfg, checkpoint_root=root))
+    assert again["timings"] == {} and jobs == []
 
 def test_containment_asymmetric_overlap(spark):
     """containment_a ~ 1 when A's shingles all appear in B (A embedded in
